@@ -98,7 +98,7 @@ object Bench {
     * sample — the inverted-warm test is skipped (it would compare warm
     * medians against a fast warm head and spuriously burn retries) and
     * the spike test covers the whole series. */
-  private def anomalous(ts: Seq[Double], isRetry: Boolean = false): Boolean =
+  private def anomalous(ts: Seq[Double], isRetry: Boolean): Boolean =
     ts.size >= 2 && {
       val cold = ts.head
       val warm = if (isRetry) ts else ts.drop(1)
@@ -257,7 +257,8 @@ object Bench {
     // line past the driver's tail capture. Medians are rounded to 1 µs:
     // far below measurement noise, and it halves the line length.
     def r6(x: Double): String = {
-      val s = f"$x%.6f"
+      // Locale.ROOT: a comma-decimal default locale would print 0,5
+      val s = "%.6f".formatLocal(java.util.Locale.ROOT, x)
       if (s.contains('.')) s.reverse.dropWhile(_ == '0').reverse.stripSuffix(".") else s
     }
     val qsC = results.map { case (k, med, _, _, _, _, _) => "\"" + k + "\":" + r6(med) }

@@ -2,7 +2,6 @@ package graft.exec
 
 import java.io.Serializable
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Side-effect boundary for the copy/ACL executors (SURVEY.md §7.1): the
@@ -115,11 +114,8 @@ object FileOps {
   * fan-out shape as the REST calls. */
 final class HadoopFileOps(root: String, conf: Map[String, String] = Map.empty)
     extends FileOps {
-  @transient private lazy val fs: FileSystem = {
-    val c = new Configuration()
-    conf.foreach { case (k, v) => c.set(k, v) }
-    new Path(root).getFileSystem(c)
-  }
+  @transient private lazy val fs: FileSystem =
+    new Path(root).getFileSystem(HadoopConf(conf))
 
   /** Chunked writes go through the raw stream layer: LocalFileSystem wraps a
     * ChecksumFileSystem whose append() throws and whose .crc sidecars would

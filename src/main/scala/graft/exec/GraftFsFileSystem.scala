@@ -55,7 +55,7 @@ final class GraftFsFileSystem extends FileSystem {
   private var rootDir: String = _
   private var workingDir: Path = _
   @volatile private var token: String = _
-  private val local = new RawLocalFileSystem()
+  private val local = new GraftFsFileSystem.BackingStore()
 
   override def getScheme: String = "graftfs"
   override def getUri: URI = fsUri
@@ -118,7 +118,16 @@ final class GraftFsFileSystem extends FileSystem {
   /** sidecar IO goes through java.nio directly — the backing store is a
     * local directory by construction, and the Hadoop stream ceremony
     * (4 stream opens per read-modify-write) measured ~4 ms per update,
-    * which serialized a 16k-file ownership write to ~2 minutes */
+    * which serialized a 16k-file ownership write to ~2 minutes.
+    *
+    * For the same reason the backing store never carries POSIX modes
+    * ([[GraftFsFileSystem.BackingStore]]): every mode graftfs reports
+    * comes from this sidecar or the store defaults in `fromLocal`, never
+    * from the local file, so the `chmod` that RawLocalFileSystem applies
+    * to each file and directory it creates is unobservable work — and
+    * without libhadoop it forks one `chmod` process per created entry,
+    * which was most of the cost of a small-file create, `.acl` or `.meta`
+    * write, or mkdirs. */
   private def sidecarNio(localDir: Path): java.nio.file.Path =
     java.nio.file.Paths.get(localDir.toUri.getPath, GraftFsFileSystem.OwnerSidecar)
 
@@ -291,4 +300,11 @@ object GraftFsFileSystem {
   /** hidden per-directory ownership record (never listed) */
   private[exec] val OwnerSidecar = "_graftfs_owners"
   private val sidecarLock = new Object
+
+  /** graftfs's local backing tree: RawLocalFileSystem minus POSIX modes.
+    * Its create and mkdirs call setPermission on every new entry; here
+    * that is a no-op (see sidecarNio for why nothing reads the modes). */
+  private final class BackingStore extends RawLocalFileSystem {
+    override def setPermission(p: Path, permission: FsPermission): Unit = ()
+  }
 }

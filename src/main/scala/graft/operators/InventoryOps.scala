@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.GraftQuery
@@ -1014,9 +1013,7 @@ object InventoryOps {
         s"fs.graftfs.root.$acct" -> backing,
         "fs.graftfs.token.provider" -> "graft.exec.CountingTokenProvider")
       val rootUri = s"graftfs://$acct/"
-      val conf = new org.apache.hadoop.conf.Configuration()
-      hc.foreach { case (k, v) => conf.set(k, v) }
-      val fs = new Path(rootUri).getFileSystem(conf)
+      val fs = new Path(rootUri).getFileSystem(graft.exec.HadoopConf(hc))
       val keys = graft.Tables.lineitem(spark, sfDir)
         .filter(col("l_partkey") % 200 === 0)
         .select("l_partkey", "l_orderkey", "l_linenumber", "l_suppkey").distinct()

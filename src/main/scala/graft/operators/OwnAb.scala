@@ -24,7 +24,6 @@ object OwnAb {
   def main(args: Array[String]): Unit = {
     val spark = graft.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
     val topDirs = if (args.length > 0) args(0).toInt else 30
     val subDirs = if (args.length > 1) args(1).toInt else 20
     val filesPer = if (args.length > 2) args(2).toInt else 50

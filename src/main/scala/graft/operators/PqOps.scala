@@ -50,7 +50,7 @@ object PqOps {
   val SubDim = 4
   val SubK = 32
 
-  import SimilarityOps.{IvfProbes, NumQueries, TopK}
+  import SimilarityOps.{NumQueries, TopK}
 
   private def embeddings(spark: SparkSession, sfDir: String): DataFrame =
     graft.Tables.embeddings(spark, sfDir)

@@ -520,7 +520,7 @@ object SimilarityOps {
     * distributed argmin machinery; `vecs` lets probe generation rank
     * ONLY the query vectors instead of the corpus) */
   private def rankedFor(spark: SparkSession, sfDir: String,
-      cents: Array[Array[Long]], vecs: Option[DataFrame] = None): DataFrame = {
+      cents: Array[Array[Long]], vecs: Option[DataFrame]): DataFrame = {
     import spark.implicits._
     val centRows = cents.zipWithIndex.flatMap { case (cs, c) =>
       cs.zipWithIndex.map { case (x, i) => (c, i, x) }

@@ -5,7 +5,6 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -18,6 +17,8 @@ import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOr
 import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.exec.HadoopConf
 
 /** DataSource V2 for the recursive file-inventory scan (§2 op 1/4 as a
   * first-class Spark SOURCE instead of a pre-built frame): every file and
@@ -254,9 +255,7 @@ private final case class InventoryCommit() extends WriterCommitMessage
 private final class InventoryWriter(root: String, hadoopConf: Map[String, String],
     nameIdx: Int, folderIdx: Int, lenIdx: Int, ownIdx: Option[(Int, Int, Int)])
     extends DataWriter[InternalRow] {
-  private val conf = InventoryScan.configuration(hadoopConf)
-  private val fs = new Path(root).getFileSystem(conf)
-  private val rootPath = fs.makeQualified(new Path(root))
+  private val (fs, rootPath) = InventoryScan.fsAndRoot(root, hadoopConf)
 
   private def abs(rel: String): Path = new Path(rootPath, rel.stripPrefix("/"))
 
@@ -484,9 +483,7 @@ private final case class InventoryScan(root: String, hadoopConf: Map[String, Str
         s"PushedGroupBy: [${a.groupCols.mkString(", ")}]").getOrElse("")
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val conf = InventoryScan.configuration(hadoopConf)
-    val fs = new Path(root).getFileSystem(conf)
-    val rootPath = fs.makeQualified(new Path(root))
+    val (fs, rootPath) = InventoryScan.fsAndRoot(root, hadoopConf)
     // a subtree rooted at dir D can only contain parent_directory and
     // name values with prefix D — compatible with every pushed prefix /
     // equality / IN constraint iff one side is a prefix of the other (the
@@ -623,11 +620,7 @@ private final class InventoryMicroBatchStream(root: String,
   private def capped(off: Long): StreamingOffset =
     InventoryOffset(availableNowEnd.fold(off)(math.min(off, _)))
 
-  private def fsAndRoot: (FileSystem, Path) = {
-    val conf = InventoryScan.configuration(hadoopConf)
-    val fs = new Path(root).getFileSystem(conf)
-    (fs, fs.makeQualified(new Path(root)))
-  }
+  private def fsAndRoot: (FileSystem, Path) = InventoryScan.fsAndRoot(root, hadoopConf)
 
   override def initialOffset(): StreamingOffset = InventoryOffset(Long.MinValue)
 
@@ -850,17 +843,10 @@ private final case class InventoryStreamPartition(group: InventoryPartitionGroup
     startMs: Long, endMs: Long) extends InputPartition
 
 private object InventoryScan {
-  def configuration(extra: Map[String, String]): Configuration = {
-    val c = new Configuration()
-    extra.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
-
   /** one (FileSystem, qualified root) per caller — the FS instance is
     * Hadoop-cache-shared, the Configuration is built exactly once */
   def fsAndRoot(root: String, hadoopConf: Map[String, String]): (FileSystem, Path) = {
-    val conf = configuration(hadoopConf)
-    val fs = new Path(root).getFileSystem(conf)
+    val fs = new Path(root).getFileSystem(HadoopConf(hadoopConf))
     (fs, fs.makeQualified(new Path(root)))
   }
 

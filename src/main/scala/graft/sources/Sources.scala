@@ -1,10 +1,11 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.exec.HadoopConf
 
 /** Source formats of the reference beyond parquet (SURVEY.md §2.1):
   *
@@ -131,7 +132,7 @@ object Sources {
     val scanned = spark.createDataset(seedDirs)
       .repartition(math.min(seedDirs.size, 32).max(1))
       .mapPartitions { dirs =>
-        val conf = new Configuration()
+        val conf = HadoopConf()
         dirs.flatMap { d =>
           val p = new Path(d)
           val fs = p.getFileSystem(conf)
@@ -181,7 +182,7 @@ object Sources {
     val scanned = spark.createDataset(seedDirs)
       .repartition(math.min(seedDirs.size, 32).max(1))
       .mapPartitions { dirs =>
-        val conf = new Configuration()
+        val conf = HadoopConf()
         dirs.flatMap { d =>
           val seed = new Path(d)
           val fs = seed.getFileSystem(conf)

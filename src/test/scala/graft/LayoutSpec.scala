@@ -71,7 +71,6 @@ class LayoutSpec extends AnyFunSuite {
 
   test("range-partitioned z-order write narrows per-file spans on BOTH dimensions") {
     val spark = TestSpark.spark
-    import spark.implicits._
     // 256×256 uniform grid: the worst case for 1-D sorting, the model
     // case for z-order tiling
     val grid = spark.range(256L * 256L)

@@ -639,7 +639,6 @@ class OperatorInvariantSpec extends AnyFunSuite with CacheDrained {
   }
 
   test("boilerplate stripping is frequency-correct and the frequent set broadcasts") {
-    import org.apache.spark.sql.functions._
     val spark = TestSpark.spark
     import spark.implicits._
     // 60 docs: a shared footer in all, a half-corpus banner, unique bodies

@@ -144,6 +144,41 @@ class OwnershipSourceSpec extends AnyFunSuite {
     assert(names == Set("file.dat"), s"ownership sidecar leaked into listing: $names")
   }
 
+  test("graftfs modes come from the ownership records, never from the backing files") {
+    val (rootUri, hc) = freshAccount("pm")
+    val backing = hc.collectFirst { case (k, v) if k.startsWith("fs.graftfs.root.") => v }.get
+    val fs = hadoopFs(rootUri, hc)
+    def mode(p: Path) = fs.getFileStatus(p).getPermission.toString
+    def sidecar(dir: String): Set[String] = {
+      val sc = java.nio.file.Paths.get(backing, dir, "_graftfs_owners")
+      if (!java.nio.file.Files.exists(sc)) Set.empty
+      else new String(java.nio.file.Files.readAllBytes(sc), "UTF-8").split("\n").toSet - ""
+    }
+    // entries made by create and by a nested mkdirs report the defaults
+    val f = new Path(rootUri + "m/n/f.dat")
+    assert(fs.mkdirs(new Path(rootUri + "m/n")))
+    val out = fs.create(f, true); out.write(Array[Byte](1)); out.close()
+    assert(mode(f) == "rw-r--r--" && mode(new Path(rootUri + "m")) == "rwxr-xr-x" &&
+      mode(new Path(rootUri + "m/n")) == "rwxr-xr-x",
+      s"default modes drifted: ${mode(f)} ${mode(new Path(rootUri + "m"))}")
+    val listed = fs.listStatus(new Path(rootUri + "m")).map(_.getPermission.toString).toSeq
+    assert(listed == Seq("rwxr-xr-x"), s"listed directory mode drifted: $listed")
+    // whatever mode the local file has, the store answers from its record
+    java.nio.file.Files.setPosixFilePermissions(java.nio.file.Paths.get(backing, "m/n/f.dat"),
+      java.nio.file.attribute.PosixFilePermissions.fromString("rwx------"))
+    assert(mode(f) == "rw-r--r--", s"backing file mode leaked into the status: ${mode(f)}")
+    // setOwner/setPermission persist in the parent's sidecar
+    fs.setOwner(f, "dave", "research")
+    fs.setPermission(f, FsPermission.valueOf("-rw-------"))
+    assert(sidecar("m/n") == Set("f.dat\tdave\tresearch\trw-------"),
+      s"ownership record not persisted: ${sidecar("m/n")}")
+    assert(mode(f) == "rw-------")
+    // an overwriting create drops the entry's record: defaults again
+    val out2 = fs.create(f, true); out2.write(Array[Byte](2)); out2.close()
+    assert(sidecar("m/n").isEmpty, s"overwrite kept the old record: ${sidecar("m/n")}")
+    assert(fs.getFileStatus(f).getOwner == "graft" && mode(f) == "rw-r--r--")
+  }
+
   test("ownership records follow renames and die with deletes (no stale-owner inheritance)") {
     val (rootUri, hc) = freshAccount("rn")
     val fs = hadoopFs(rootUri, hc)

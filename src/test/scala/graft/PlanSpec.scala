@@ -359,7 +359,6 @@ class PlanSpec extends AnyFunSuite with CacheDrained {
       conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16KB")
       conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64KB")
       conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      import spark.implicits._
       // one hot key carrying ~98% of the left side
       val left = spark.range(200000)
         .select((when(col("id") % 50 === 0, col("id") % 97).otherwise(0L)).as("k"),

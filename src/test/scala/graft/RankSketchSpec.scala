@@ -84,7 +84,7 @@ class RankSketchSpec extends AnyFunSuite with CacheDrained {
   }
 
   test("sketch_hll_merge: day-merged registers equal one-shot registers (sketch algebra)") {
-    import org.apache.spark.sql.functions.{col, expr, lit, lpad, max}
+    import org.apache.spark.sql.functions.{col, expr, lpad, max}
     val ev = graft.Tables.events(spark, TestSpark.Sf)
     val v = graft.functions.PortableHash.minhashPerm(
       graft.functions.PortableHash.h8(lpad(col("user_id").cast("string"), 8, "0")), 5)
@@ -306,7 +306,6 @@ class RankSketchSpec extends AnyFunSuite with CacheDrained {
   }
 
   test("rec_item_item: per-item heap rewrite fires and scores recompute exactly") {
-    import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("rec_item_item")(spark, TestSpark.Sf)
     val rows = df.collect()
     df.queryExecution.executedPlan // force planning after collect
@@ -350,7 +349,6 @@ class RankSketchSpec extends AnyFunSuite with CacheDrained {
   }
 
   test("graph_assortativity: moments replay from a driver edge build; r in [-1, 1]") {
-    import org.apache.spark.sql.functions._
     val row = SparkEntry.queries("graph_assortativity")(spark, TestSpark.Sf).head()
     val (n, sx, sxx, sxy, r6) =
       (row.getLong(0), row.getLong(1), row.getLong(2), row.getLong(3), row.getDouble(4))

@@ -461,7 +461,6 @@ class SourcesSpec extends AnyFunSuite {
     assert(second == Set(("/a/new.dat", 13L)),
       s"incremental drain did not deliver exactly the delta: $second")
     // offset round-trip: the watermark survives serialization
-    import graft.sources.InventoryDataSource
     val scan = spark.readStream.format("graft-inventory").option("root", tmp).load()
     assert(scan.isStreaming, "inventory readStream is not a streaming frame")
   }

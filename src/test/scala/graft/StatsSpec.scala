@@ -390,7 +390,6 @@ class StatsSpec extends AnyFunSuite with CacheDrained {
   test("events_ab_cuped: bivariate moments replay; x+y equals the univariate metric") {
     val spark = TestSpark.spark
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val rows = SparkEntry.queries("events_ab_cuped")(spark, TestSpark.Sf)
       .as[(Long, Long, Long, Long, Long, Long, Long)].collect().sortBy(_._1)
     assert(rows.map(_._1).toSeq == Seq(0L, 1L))
