@@ -1,15 +1,46 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Dev helper: run a single registered query and show plan + rows.
-  * Usage: runMain graft.RunOne <queryName> [sfDir] [explain] [jobs] [conf:k=v ...]
+
+/** Dev helper: run a single registered query, or a library surface (an
+  * op that is deliberately not a registered query — data-dependent shapes
+  * the SQL oracle cannot express), and show plan + rows.
+  * Usage: runMain graft.RunOne <name> [sfDir] [explain] [jobs] [show] [conf:k=v ...]
   * `jobs` prints a per-Spark-job wall/desc line after each iteration —
   * the job-count/orchestration attribution view (r12: most bench queries
   * at sf0.1 are bound by per-job fixed cost, not compute).
+  * Each timed iteration builds its frame inside the timer and releases
+  * every tracked cache after its count, as Bench does, so no iteration
+  * reads an earlier one's cached family frames; iter2/iter3 are warm in
+  * the JVM only.
   */
 object RunOne {
+  private val library: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "semdedup_scaled" -> ((spark, sfDir) =>
+      graft.operators.SimilarityOps.semDedupScaled(spark, sfDir)),
+    // the rank()-form twin of topk_heap_wide: RewriteRankLimit never
+    // fires on rank (boundary ties), so this rides Spark's built-in
+    // sort-based WindowGroupLimit path — the A/B control for the
+    // bounded-heap operator (TopKPlanSpec proves row-identity)
+    "topk_control" -> { (spark, sfDir) =>
+      import org.apache.spark.sql.expressions.Window
+      import org.apache.spark.sql.functions._
+      val w = Window.partitionBy("l_suppkey")
+        .orderBy(col("l_extendedprice").desc, col("l_orderkey").asc,
+          col("l_linenumber").asc)
+      Tables.lineitem(spark, sfDir)
+        .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
+          col("l_extendedprice"))
+        .withColumn("rn", rank().over(w))
+        .filter(col("rn") <= 3)
+    })
+
   def main(args: Array[String]): Unit = {
     val name = args(0)
+    val run = SparkEntry.queries.getOrElse(name, library.getOrElse(name,
+      sys.error(s"$name is neither a registered query nor a library surface " +
+        s"(${library.keys.toSeq.sorted.mkString(", ")})")))
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = Sessions.local(cpus)
@@ -38,14 +69,18 @@ object RunOne {
       val kv = a.stripPrefix("conf:").split("=", 2)
       spark.conf.set(kv(0), kv(1))
     }
-    val df = SparkEntry.queries(name)(spark, sfDir)
-    if (args.contains("explain")) df.explain("formatted")
+    if (args.contains("explain")) {
+      run(spark, sfDir).explain("formatted")
+      CacheTracker.releaseAll(blocking = true)
+    }
     (1 to 3).foreach { it =>
       val t0 = System.nanoTime()
-      val n = SparkEntry.queries(name)(spark, sfDir).count()
+      val n = run(spark, sfDir).count()
       println(f"[runone] $name iter$it rows=$n in ${(System.nanoTime() - t0) / 1e9}%.2f sec")
+      CacheTracker.releaseAll(blocking = true)
     }
-    if (args.contains("show")) df.show(20, truncate = false)
+    // a fresh frame: the timed ones' checkpointed caches are released
+    if (args.contains("show")) run(spark, sfDir).show(20, truncate = false)
     spark.stop()
   }
 }

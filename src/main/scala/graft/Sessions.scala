@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared local-mode SparkSession builder for the tool mains (Bench,
-  * Verify, RunOne, Plans, CandCount, LibRun, ScaleData). One place for
-  * the settings every entry point needs:
+/** Shared local-mode SparkSession builder for the five tool mains
+  * (Bench, Verify, RunOne, Plans, ScaleData). One place for the settings
+  * every entry point needs:
   *
   *  - UTC session timezone: the NTZ↔LTZ timestamp casts in
   *    Tables.events/StreamOps.eventStream are instant-preserving only

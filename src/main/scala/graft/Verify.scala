@@ -1,5 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.json4s.{JObject, JString}
+import org.json4s.jackson.JsonMethods.{compact, render}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -11,7 +13,7 @@ object Verify {
     val sqlOnly = args.length > 2 && args(2) == "sqlonly"
     if (sqlOnly) {
       new java.io.File(outDir).mkdirs()
-      Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson)
+      Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson())
       return
     }
     // optional args(2..): restrict to the named queries (local iteration;
@@ -42,23 +44,14 @@ object Verify {
       }
       finally CacheTracker.releaseAll() // per-query helper caches
     }
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson())
     spark.stop()
   }
 
-  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-  // — a tab or CR in builder-authored SQL would otherwise make the
-  // driver's json.load fail and silently zero the round's correctness.
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
-  private def oracleJson: String = SparkEntry.oracleSql
-    .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+  /** `{name: oracle SQL}` as one JSON object; json4s escapes quotes,
+    * backslashes and every control char — a stray tab or CR in
+    * hand-written SQL must not make the DuckDB compare's json.load fail
+    * and silently zero the correctness read. */
+  private[graft] def oracleJson(sql: Map[String, String] = SparkEntry.oracleSql): String =
+    compact(render(JObject(sql.toList.map { case (k, v) => k -> JString(v) })))
 }

@@ -368,8 +368,8 @@ object CopyExecutor {
       .mapPartitions { it =>
         it.map { case (name, isFolder, perms, newOwner, newGrp) =>
           try {
-            val kept = ops.getMetadata(name) -
-              (FileOps.MetaPermissions, FileOps.MetaIsFolder)
+            val kept = ops.getMetadata(name) --
+              Seq(FileOps.MetaPermissions, FileOps.MetaIsFolder)
             val perm =
               s"""{"owner":"$newOwner","group":"$newGrp","permissions":"$perms"}"""
             val merged = kept +

@@ -80,7 +80,7 @@ object PqOps {
     require(n >= SubK, s"PQ needs at least $SubK vectors, corpus has $n")
     val step = n / SubK
     val seedIds = Array.tabulate(SubK)(c => c * step)
-    val seeds = q.filter(col("vec_id").isin(seedIds.map(Long.box): _*))
+    val seeds = q.filter(col("vec_id").isin(seedIds.toSeq.map(Long.box): _*))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).toMap
     val cb0: Array[Array[Array[Long]]] = Array.tabulate(NumSub) { sub =>
       Array.tabulate(SubK) { c =>

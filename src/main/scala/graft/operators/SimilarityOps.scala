@@ -146,8 +146,9 @@ object SimilarityOps {
     Tables.embeddings(spark, sfDir)
 
   /** Number of inverted lists probed per query in sim_ann_ivf. Chosen by
-    * a measured nprobe sweep (SweepIvf) to hold recall@10 ≥ 0.8 on the
-    * demo corpus: recall = 0.81 (sf0.001) / 0.84 (sf0.01) at nprobe=6.
+    * a measured nprobe sweep (SweepIvf, removed after 26c7766) to hold
+    * recall@10 ≥ 0.8 on the demo corpus: recall = 0.81 (sf0.001) / 0.84
+    * (sf0.01) at nprobe=6.
     * The demo embeddings are near-orthogonal (no planted cluster
     * structure), so recall can never beat the probed-list mass by much —
     * a random 6/10-list scan would land at 0.60, and the learned codebook
@@ -833,17 +834,17 @@ object SimilarityOps {
        |      WHERE c.vec_id <> q.qid)""".stripMargin
   }
 
-  /** IVF candidate pairs (qid, nid): every member of the query's nprobe
-    * nearest inverted lists. Equi-join on list id — n·nprobe/K pairs. */
-  def ivfCandidates(spark: SparkSession, sfDir: String,
-      nprobe: Int = IvfProbes): DataFrame = {
+  /** IVF candidate pairs (qid, nid): every member of the query's
+    * IvfProbes nearest inverted lists. Equi-join on list id — n·nprobe/K
+    * pairs. */
+  def ivfCandidates(spark: SparkSession, sfDir: String): DataFrame = {
     // assignment (all n vectors): one codegen argmin pass; full ranking
     // (needed for the nprobe probe lists) only over the NumQueries query
     // vectors — the n×K explosion never touches the corpus side
     val assign = kmeansAssign(spark, sfDir).withColumnRenamed("cluster", "list")
     val probes = rankedFor(spark, sfDir, kmeansCodebook(spark, sfDir),
         Some(embeddings(spark, sfDir).filter(col("vec_id") < NumQueries)))
-      .filter(col("r") <= nprobe)
+      .filter(col("r") <= IvfProbes)
       .select(col("vec_id").as("qid"), col("cluster").as("list"))
     assign.join(broadcast(probes), Seq("list"))
       .filter(col("vec_id") =!= col("qid"))
@@ -875,9 +876,8 @@ object SimilarityOps {
   /** IVF probe + exact re-rank: top-k rows (qid, rnk, nid, sim6) per
     * query id — the sim_ann_ivf pipeline body, shared with
     * sim_ann_recall's evaluation join (unordered; callers sort). */
-  def ivfTopK(spark: SparkSession, sfDir: String,
-      nprobe: Int = IvfProbes): DataFrame =
-    rerankCands(spark, sfDir, ivfCandidates(spark, sfDir, nprobe))
+  def ivfTopK(spark: SparkSession, sfDir: String): DataFrame =
+    rerankCands(spark, sfDir, ivfCandidates(spark, sfDir))
 
   /** Corpus-scaled coarse quantizer: K = ⌈n / ScaledAnnOccupancy⌉
     * md5-ranked sample vectors (quantized to the shared 1e-6 integer
@@ -954,15 +954,14 @@ object SimilarityOps {
     * pipeline body). Assignment is one CentroidArgmin codegen pass over
     * the corpus; only the NumQueries query vectors pay the full K-way
     * ranking for their probe lists. */
-  def ivfScaledTopK(spark: SparkSession, sfDir: String,
-      nprobe: Int = IvfProbes): DataFrame = {
+  def ivfScaledTopK(spark: SparkSession, sfDir: String): DataFrame = {
     val cents = scaledCodebook(spark, sfDir)
     val assign = embeddings(spark, sfDir).select(col("vec_id"),
       graft.functions.CentroidArgmin
         .centroidArgmin(col("embedding"), cents).as("list"))
     val probes = rankedFor(spark, sfDir, cents,
         Some(embeddings(spark, sfDir).filter(col("vec_id") < NumQueries)))
-      .filter(col("r") <= nprobe)
+      .filter(col("r") <= IvfProbes)
       .select(col("vec_id").as("qid"), col("cluster").as("list"))
     val cands = assign.join(broadcast(probes), Seq("list"))
       .filter(col("vec_id") =!= col("qid"))

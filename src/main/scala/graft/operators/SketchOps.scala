@@ -446,7 +446,7 @@ object SketchOps {
       val wordArr = new Array[Long](BloomBits / 63 + 1)
       bloomWords(dim, col("c_custkey")).collect()
         .foreach(r => wordArr(r.getLong(0).toInt) = r.getLong(1))
-      val wordsLit = array(wordArr.map(lit(_)): _*)
+      val wordsLit = array(wordArr.toSeq.map(lit(_)): _*)
       // the DIGIT form of H8: predicate pushdown re-inlines the hash into
       // every filter conjunct (8x per row, no CSE), so the hash must be
       // cheap standalone — the string-chain form here was measured at

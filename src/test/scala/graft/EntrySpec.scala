@@ -1,5 +1,7 @@
 package graft
 
+import org.json4s.{JObject, JString}
+import org.json4s.jackson.JsonMethods.parse
 import org.scalatest.funsuite.AnyFunSuite
 
 /** driver-contract smoke checks */
@@ -14,6 +16,28 @@ class EntrySpec extends AnyFunSuite with CacheDrained {
     assert(names.distinct.size == names.size)
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
     assert(SparkEntry.benchQueries.toSet.subsetOf(SparkEntry.queries.keySet))
+  }
+
+  /** oracle_sql.json must read back unchanged: a raw control char in it
+    * fails the DuckDB compare's json.load and zeroes the correctness read */
+  private def roundTrip(sql: Map[String, String]): Unit = {
+    val json = Verify.oracleJson(sql)
+    assert(json.forall(_ >= ' '), "no raw control char in the JSON text")
+    val back = parse(json) match {
+      case JObject(fields) => fields.collect { case (k, JString(v)) => k -> v }.toMap
+      case other => fail(s"not an object: $other")
+    }
+    assert(back == sql)
+  }
+
+  test("oracle JSON round-trips every registered oracle SQL string") {
+    roundTrip(SparkEntry.oracleSql)
+  }
+
+  test("oracle JSON escapes quote, backslash and control chars") {
+    roundTrip(Map(
+      "q\"name\\\t" -> "SELECT '\"a\\b\tc\rd\ne\u0001f' AS s",
+      "plain" -> "SELECT 1"))
   }
 
   /** sim_near_dup_t08 is empty BY DESIGN on the demo corpus (max cosine

@@ -102,7 +102,7 @@ class PackingSpec extends AnyFunSuite with CacheDrained {
       .collect().map(r => (r.getString(0), r.getLong(1)))
     val cap = PackingOps.Capacity
     val packable = sizes.filter(_._2 <= cap).map(_._2)
-    def nfBins(order: Seq[Long]): Long = {
+    def nfBins(order: Array[Long]): Long = {
       var cum = 0L
       order.filter(_ > 0).map { s => cum += s; cum / cap + 1 }.max
     }

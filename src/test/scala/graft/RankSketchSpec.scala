@@ -414,7 +414,7 @@ class RankSketchSpec extends AnyFunSuite with CacheDrained {
     val nodes = ed.flatMap(e => Seq(e._1, e._2)).distinct
     val inf = 1000000000L
     val dist = scala.collection.mutable.Map(
-      nodes.map(n => n -> (if (n == "signup") 0L else inf)): _*)
+      nodes.toSeq.map(n => n -> (if (n == "signup") 0L else inf)): _*)
     (1 to 6).foreach { _ =>
       cost.foreach { case ((s, d), c) =>
         if (dist(s) < inf && dist(s) + c < dist(d)) dist(d) = dist(s) + c

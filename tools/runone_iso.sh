@@ -1,10 +1,10 @@
 #!/bin/bash
 # Fresh-JVM single-query runner matching the Bench fork JVM (16g
-# pre-touched heap, default G1) — bench_isolated.sh predates the r5
-# AlwaysPreTouch fix and its lazy 16g ParallelGC heap re-introduces the
-# first-touch wall on this guest kernel (measured this round: 190 s for
-# a query the pre-touched shared JVM runs in 8.8 s), so per-query A/Bs
-# must pre-touch exactly like the bench JVM does.
+# pre-touched heap, default G1). A lazily grown heap hits the first-touch
+# wall on VM guests where touching fresh pages is slow (measured: 190 s
+# for a query the pre-touched shared JVM runs in 8.8 s), so per-query
+# A/Bs must pre-touch exactly like the bench JVM does. <query> may also
+# be a RunOne library surface (semdedup_scaled, topk_control).
 #
 # Usage: tools/runone_iso.sh <sfDir> <query> [extra RunOne args...]
 set -u
