@@ -241,12 +241,9 @@ object Bench {
         r.name -> JArray(r.attempts.map(series).toList)).toList)) ~
       health ~ ("sf" -> sfDir)
     // The committed-artifact copy holds the FULL payload (per-iteration
-    // series, retry histories): the driver captures only a stdout *tail*,
-    // which truncated the verbose line mid-series in r07/r08 AND r11/r12
-    // (PERF parsed:null two rounds running). Default name is cpus-stamped
-    // so the driver's multi-config runs (32-cpu then 8-cpu) stop clobbering
-    // each other's artifact — the r12 32-cpu run survives only as a
-    // truncated tail because the 8-cpu run overwrote BENCH_LOCAL.json.
+    // series, retry histories); stdout gets only the compact summary
+    // below. Default name is cpus-stamped so multi-config runs (32-cpu
+    // then 8-cpu) do not clobber each other's artifact.
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"BENCH_LOCAL_c$cpus.json")
     try {
       java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
@@ -258,9 +255,11 @@ object Bench {
     }
     // stdout carries a COMPACT one-line summary as the LAST line — same
     // metric/value/unit/queries/sf contract, same numbers (medians of the
-    // same series), but without the iters/retries arrays that pushed the
-    // line past the driver's tail capture. Medians are rounded to 1 µs:
-    // far below measurement noise, and it halves the line length.
+    // same series), without the iters/retries arrays. Under `sbt --batch
+    // "runMain graft.Bench"` it stays the bare last line only because
+    // build.sbt forwards run output without sbt's "[info] " prefix and
+    // turns off the trailing `[success]` line; its length does not
+    // matter. Medians are rounded to 1 µs: far below measurement noise.
     def r6(x: Double): Double = math.rint(x * 1e6) / 1e6
     val summary = ("metric" -> "total") ~ ("value" -> r6(total)) ~ ("unit" -> "sec") ~
       ("commit" -> sha) ~ ("queries" -> perQuery(r => JDouble(r6(r.median)))) ~

@@ -6,17 +6,17 @@ import org.apache.spark.sql.functions._
 /** The reference's copy engine re-expressed on Spark's scheduler
   * (SURVEY.md §2.10, §3.3):
   *
-  *  - op 33 phase barrier: directories created in depth order as a first
-  *    action (parents before children), then files copied in a second —
-  *    two ordered Spark jobs replace copy-to-adls.py:117-132.
-  *  - op 32 work queue: `repartition(n).foreachPartition` replaces the
-  *    10-thread queue.Queue fan-out (adls_copy_utils.py:106-145); Spark's
-  *    task scheduler provides retry/locality for free.
+  *  - op 33 phase barrier: directories created one depth level per job
+  *    (parents before children), then files copied in one more job —
+  *    ordered Spark jobs replace copy-to-adls.py:117-132.
+  *  - op 32 work queue: `repartition(n)` fan-outs replace the 10-thread
+  *    queue.Queue fan-out (adls_copy_utils.py:106-145), one Spark job per
+  *    barrier; Spark's task scheduler provides retry/locality for free.
   *  - op 34 error tolerance: failures become a `status` row in the returned
   *    quarantine DataFrame instead of the reference's silent skip (which
   *    could hang its queue.join barrier — copy-to-adls.py:93 note).
   *
-  * At 100 TB the dirs action is tiny (directories ≪ files) and the files
+  * At 100 TB the dirs phase is tiny (directories ≪ files) and the files
   * action is embarrassingly parallel; parallelism = partitions, the
   * `-m`/`--max-parallelism` knobs of the reference.
   */
@@ -66,7 +66,19 @@ object CopyExecutor {
     * is reported `skipped` without touching the destination, so a re-run
     * after a partial failure pays only for the missing files. An
     * existing file at the WRONG length (a torn earlier copy) is re-copied
-    * — createFile truncates, same as the reference's overwriting PUT. */
+    * — createFile truncates, same as the reference's overwriting PUT.
+    *
+    * Job shape: the dirs are fanned out once (`parallelism` tasks) by the
+    * job that collects their distinct depths, then each depth level is
+    * one job, and the files are one more: L + 2 jobs for L levels. The
+    * phases are plain RDD jobs because a side-effect loop needs no
+    * Catalyst planning; a Dataset query per level would pay for planning,
+    * an AQE stage and an exchange at every barrier.
+    *
+    * Result lifetime: the per-item results are persisted RDDs that live
+    * as long as the returned frame. Further actions on it only read them,
+    * `spark.catalog.clearCache()` does not re-run the copy, and the
+    * context cleaner reclaims them once the frame is unreachable. */
   def copyInventory(
       spark: SparkSession,
       inventory: DataFrame,
@@ -76,37 +88,27 @@ object CopyExecutor {
       blockSize: Long = BlockSize,
       preflight: Boolean = false): DataFrame = {
     import spark.implicits._
+    val keep = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
-    // phase 1: dirs, one DISTRIBUTED action per depth level, shallowest
-    // first. Levels are a barrier (an action completes before the next
-    // starts), so parents exist before children without any global order —
-    // and within a level mkdirs are embarrassingly parallel. Only the
-    // distinct depth values (~tree height, tens at most) reach the driver;
-    // the dirs frame itself never does — at 100 TB / O(10M) directories
-    // the old collect() here was a multi-GB driver array.
+    // phase 1: dirs, shallowest level first; a level's job completes
+    // before the next starts, so parents exist before children. Only the
+    // depth values (~tree height) reach the driver, never the dirs.
     val dirs = inventory.filter(col("is_folder"))
-      .withColumn("depth", length(col("name")) - length(regexp_replace(col("name"), "/", "")))
-      .select("depth", "name", "owner", "grp", "perms")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val depths = dirs.select("depth").distinct().as[Int].collect().sorted
-    val dirResults = depths.map { d =>
-      val level = dirs.filter(col("depth") === d)
-        .select("name", "owner", "grp", "perms")
-        .repartition(parallelism)
-        .as[(String, String, String, String)]
-        .mapPartitions { it =>
-          it.map { case (name, owner, grp, perms) =>
-            try {
-              ops.mkdirs(name)
-              ops.setOwnership(name, owner, grp, perms)
-              CopyResult(name, "ok", "dir")
-            } catch {
-              case e: Exception => CopyResult(name, "failed", String.valueOf(e.getMessage))
-            }
-          }
+      .select(length(col("name")) - length(regexp_replace(col("name"), "/", "")),
+        col("name"), col("owner"), col("grp"), col("perms"))
+      .as[(Int, String, String, String, String)]
+      .rdd.repartition(parallelism).persist(keep)
+    val depths = dirs.map(_._1).distinct().collect().sorted
+    val levels = depths.toSeq.map { d =>
+      val level = dirs.filter(_._1 == d).map { case (_, name, owner, grp, perms) =>
+        try {
+          ops.mkdirs(name)
+          ops.setOwnership(name, owner, grp, perms)
+          CopyResult(name, "ok", "dir")
+        } catch {
+          case e: Exception => CopyResult(name, "failed", String.valueOf(e.getMessage))
         }
-        .toDF()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      }.persist(keep)
       level.count() // the per-level barrier: parents before children
       level
     }
@@ -115,46 +117,42 @@ object CopyExecutor {
     // phase 2: files, partition-parallel
     val files = inventory.filter(!col("is_folder"))
       .select("name", "owner", "grp", "perms", "length")
-    val fileResults = files
-      .repartition(parallelism)
       .as[(String, String, String, String, Long)]
-      .mapPartitions { it =>
-        it.map { case (name, owner, grp, perms, len) =>
-          try {
-            // the byte length this copy will land on disk: the declared
-            // inventory length on the chunked path, the stub size otherwise
-            val physLen = if (source.isDefined) len else (len % 4096).max(1)
-            if (preflight && ops.exists(name) && ops.length(name) == physLen) {
-              CopyResult(name, "skipped", "preflight: exists at expected length")
-            } else {
-              val detail = source match {
-                case Some(src) =>
-                  val chunks = copyChunked(src, ops, name, len, blockSize)
-                  s"file chunks=$chunks"
-                case None =>
-                  // no byte store behind this inventory: deterministic stub
-                  // payload so the metadata path still lands real files
-                  ops.write(name, new Array[Byte](physLen.toInt))
-                  "file"
-              }
-              ops.setOwnership(name, owner, grp, perms)
-              CopyResult(name, "ok", detail)
+      .rdd.repartition(parallelism)
+      .map { case (name, owner, grp, perms, len) =>
+        try {
+          // the byte length this copy will land on disk: the declared
+          // inventory length on the chunked path, the stub size otherwise
+          val physLen = if (source.isDefined) len else (len % 4096).max(1)
+          if (preflight && ops.exists(name) && ops.length(name) == physLen) {
+            CopyResult(name, "skipped", "preflight: exists at expected length")
+          } else {
+            val detail = source match {
+              case Some(src) =>
+                val chunks = copyChunked(src, ops, name, len, blockSize)
+                s"file chunks=$chunks"
+              case None =>
+                // no byte store behind this inventory: deterministic stub
+                // payload so the metadata path still lands real files
+                ops.write(name, new Array[Byte](physLen.toInt))
+                "file"
             }
-          } catch {
-            case e: Exception => CopyResult(name, "failed", String.valueOf(e.getMessage))
+            ops.setOwnership(name, owner, grp, perms)
+            CopyResult(name, "ok", detail)
           }
+        } catch {
+          case e: Exception => CopyResult(name, "failed", String.valueOf(e.getMessage))
         }
       }
-      .toDF()
       // materialize the side-effecting stage exactly once: without this,
       // every downstream action on the returned frame would re-run the
       // writes (benign for idempotent overwrites, wrong for append/flush
       // sinks); task-level retries remain idempotent-overwrite by design
       // (createFile truncates, so a retried file restarts from offset 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    fileResults.count()
+      .persist(keep)
+    files.count()
 
-    dirResults.foldLeft(fileResults)(_ unionByName _)
+    spark.sparkContext.union(files +: levels).toDF()
   }
 
   final case class VerifyResult(dir: String, status: String,

@@ -164,6 +164,71 @@ class CopyExecutorSpec extends AnyFunSuite with CacheDrained {
     }
   }
 
+  /** The 4-level tree of the per-level spec plus two files, their bytes
+    * landed in `srcOps`. */
+  private def treeWithFiles(srcOps: FileOps): org.apache.spark.sql.DataFrame = {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val dirNames = Seq("/a", "/b", "/a/x", "/a/y", "/b/x",
+      "/a/x/1", "/a/y/1", "/b/x/1", "/a/x/1/deep", "/b/x/1/deep")
+    val files = Seq("/a/x/f.dat" -> 5, "/b/x/1/deep/g.dat" -> 7)
+    files.foreach { case (n, len) => srcOps.write(n, Array.fill[Byte](len)(1)) }
+    (dirNames.map(n => (n, true, 0L)) ++ files.map { case (n, len) => (n, false, len.toLong) })
+      .map { case (n, isFolder, len) =>
+        val parent = n.substring(0, n.lastIndexOf('/')) match { case "" => "/"; case p => p }
+        (n, parent, isFolder, len)
+      }
+      .toDF("name", "parent_directory", "is_folder", "length")
+      .withColumn("owner", org.apache.spark.sql.functions.lit("u"))
+      .withColumn("grp", org.apache.spark.sql.functions.lit("g"))
+      .withColumn("perms", org.apache.spark.sql.functions.lit("rwxr-xr-x"))
+  }
+
+  test("copy side effects run exactly once: a catalog clear does not re-run them") {
+    val spark = TestSpark.spark
+    val srcOps = new HadoopFileOps(s"file://${Files.createTempDirectory("graft-once-src")}")
+    val ops = new TracingFileOps(
+      new HadoopFileOps(s"file://${Files.createTempDirectory("graft-once-dst")}"))
+    val inv = treeWithFiles(srcOps)
+    CallTrace.reset()
+    val results = CopyExecutor.copyInventory(spark, inv, ops, parallelism = 3,
+      source = Some(srcOps))
+    val calls = CallTrace.list
+    assert(calls.count(_.startsWith("mkdir:")) == 10 && calls.count(_.startsWith("create:")) == 2)
+    spark.catalog.clearCache()
+    assert(results.count() == 12)
+    assert(results.collect().forall(_.getString(1) == "ok"))
+    assert(CallTrace.list == calls,
+      s"further actions re-ran the copy: ${CallTrace.list.size} calls, was ${calls.size}")
+  }
+
+  test("copyInventory job budget: one job per depth level plus two (fan-out, files)") {
+    val spark = TestSpark.spark
+    val sc = spark.sparkContext
+    val srcOps = new HadoopFileOps(s"file://${Files.createTempDirectory("graft-jobs-src")}")
+    val ops = new HadoopFileOps(s"file://${Files.createTempDirectory("graft-jobs-dst")}")
+    val inv = treeWithFiles(srcOps)
+    val group = "graft-copy-job-budget"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "copyInventory job budget")
+    try CopyExecutor.copyInventory(spark, inv, ops, parallelism = 3, source = Some(srcOps))
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    // at least one job per level: the per-level barrier stays
+    val levels = 4
+    assert(jobs.get() >= levels && jobs.get() <= levels + 2,
+      s"copyInventory started ${jobs.get()} jobs")
+  }
+
   test("per-item failures are quarantined, not fatal (op 34)") {
     val spark = TestSpark.spark
     val tmp = Files.createTempDirectory("graft-copy2").toString
