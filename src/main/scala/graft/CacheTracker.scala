@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** Registry for per-query persisted helper frames (two-phase rank inputs,
-  * label-propagation edge lists, ...). Helpers `track` what they persist;
+/** Registry for per-query persisted helper frames (Prefix.scan's ranged
+  * frames, label-propagation edge lists, ...). Helpers `track` what they persist;
   * the harness (Verify and Bench after each query's action; the specs that
   * exercise tracked helpers in an afterEach) calls `releaseAll()`, so
   * repeated query runs in one session do not accumulate cached blocks for

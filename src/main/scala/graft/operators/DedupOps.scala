@@ -622,7 +622,7 @@ object DedupOps {
     // to its SnmWindow-1 sort successors — a THIRD blocking family next to
     // the df-capped shingle join and MinHash banding, the one record-
     // linkage uses when similarity lives in a sortable key. The global
-    // numbering is TwoPhaseRank (range-partition + broadcast offsets — no
+    // numbering is Prefix.scan (range-partition + seeded counts — no
     // single-partition window), the neighborhood expansion is an
     // offset-explode EQUI-join on rank (each pair exists exactly once, no
     // distinct), and verification re-attaches the memoized shingle arrays.
@@ -651,7 +651,7 @@ object DedupOps {
       val s = docShingles(spark, sfDir)
       val keyed = Tables.documents(spark, sfDir).select(col("doc_id"),
         substring(regexp_replace(col("text"), "[^a-z0-9]", ""), 1, 32).as("k"))
-      val ranked = TwoPhaseRank.rowNumber(keyed, "rn", -1, col("k"), col("doc_id"))
+      val ranked = Prefix.scan(keyed, "rn", Seq(col("k"), col("doc_id")), lit(1L), Prefix.Sum)
         .select("doc_id", "rn")
       val right = ranked.select(col("doc_id").as("pb"), col("rn").as("rnb"))
       val pairs = ranked.select(col("doc_id").as("pa"), col("rn"))

@@ -378,7 +378,7 @@ object ExtraAggOps {
     // RFM customer segmentation (recency / frequency / monetary
     // quintiles) — the classic lifecycle-marketing rollup, built on
     // GLOBAL quintiles without a single-partition window: each metric's
-    // global rank is the TwoPhaseRank distributed prefix rank, and the
+    // global rank is the distributed prefix count (Prefix.scan), and the
     // NTILE(5) bucket is then PURE ARITHMETIC on (rank, n) — the exact
     // SQL-NTILE split (first n%5 buckets get one extra row) — so both
     // engines compute identical buckets from identical integer ranks
@@ -431,7 +431,7 @@ object ExtraAggOps {
         ("rn_f", Seq(col("f").desc, col("o_custkey").asc)),
         ("rn_m", Seq(col("m_cents").desc, col("o_custkey").asc)))
         .foldLeft(c) { case (df, (name, keys)) =>
-          TwoPhaseRank.rowNumber(df, name, -1, keys: _*)
+          Prefix.scan(df, name, keys, lit(1L), Prefix.Sum)
         }
       ranked.select(col("o_custkey"), col("r_days"), col("f"), col("m_cents"),
           tile("rn_r").as("r_q"), tile("rn_f").as("f_q"), tile("rn_m").as("m_q"),
@@ -512,8 +512,8 @@ object ExtraAggOps {
     // equi-width bins): 16 buckets each holding n/16 ± 1 rows of
     // l_extendedprice — the exact-quantile boundary computation an
     // optimizer's statistics collector (or a normalization stage) runs.
-    // Global order comes from TwoPhaseRank's distributed prefix rank
-    // (range partition + broadcast per-partition counts; ties broken by
+    // Global order comes from the distributed prefix count (Prefix.scan:
+    // range partition + per-partition counts; ties broken by
     // the (orderkey, linenumber) primary key so bucket edges are
     // deterministic), bucket id is pure arithmetic on the rank, and the
     // per-bucket rollup is one hash agg — no single-partition window at
@@ -531,7 +531,7 @@ object ExtraAggOps {
       val v = lineitem(spark, sfDir)
         .select(col("l_extendedprice").as("x"), col("l_orderkey"), col("l_linenumber"))
       val n = v.count()
-      TwoPhaseRank.rowNumber(v, "rn", -1, col("x"), col("l_orderkey"), col("l_linenumber"))
+      Prefix.scan(v, "rn", Seq(col("x"), col("l_orderkey"), col("l_linenumber")), lit(1L), Prefix.Sum)
         .withColumn("bucket", expr(s"((rn - 1) * 16) DIV $n"))
         .groupBy("bucket")
         .agg(count(lit(1)).as("n_rows"), min("x").as("lo"), max("x").as("hi"),

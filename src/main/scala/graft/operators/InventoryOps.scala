@@ -286,7 +286,7 @@ object InventoryOps {
     },
 
     // op 33: dirs-before-files phase ordering, dirs by depth. The global
-    // ordinal comes from the two-phase distributed rank (TwoPhaseRank) —
+    // ordinal comes from the distributed prefix count (Prefix.scan) —
     // no single-partition window, so the ordering step itself scales past
     // the dirs ≪ files regime the copy executor assumes.
     GraftQuery("phase_order_dirs",
@@ -297,7 +297,7 @@ object InventoryOps {
          |FROM d ORDER BY idx""".stripMargin) { (spark, sfDir) =>
       val dirs = inventory(spark, sfDir).filter(col("is_folder"))
         .withColumn("depth", length(col("name")) - length(regexp_replace(col("name"), "/", "")))
-      TwoPhaseRank.rowNumber(dirs, "idx", -1, col("depth"), col("name"))
+      Prefix.scan(dirs, "idx", Seq(col("depth"), col("name")), lit(1L), Prefix.Sum)
         .select("idx", "name", "depth")
         .orderBy("idx")
     },

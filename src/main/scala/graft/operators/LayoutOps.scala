@@ -119,7 +119,7 @@ object LayoutOps {
 
     // Data-skipping effectiveness, measured: lineitem cut into 16 EQUAL-
     // FREQUENCY blocks (exactly what a writer produces — sort by the
-    // layout key, cut every n/16 rows; rank via the distributed two-phase
+    // layout key, cut every n/16 rows; rank via the distributed Prefix.scan
     // rank, no global window) under the Z-ORDER layout vs a plain 1-D
     // (orderkey) sort. Both dimensions are RANGE-NORMALIZED to 16 bits
     // before interleaving ((x·65536) DIV (max+1) — the real writer's move:
@@ -191,13 +191,13 @@ object LayoutOps {
         .select(col("l_partkey"), col("l_orderkey"),
           zorder2(expr("l_partkey * 65536 DIV (mp + 1)"),
             expr("l_orderkey * 65536 DIV (mo + 1)")).as("zkey"))
-      val zb = TwoPhaseRank.rowNumber(z, "rn", -1,
-          col("zkey").asc, col("l_partkey").asc, col("l_orderkey").asc)
+      val zb = Prefix.scan(z, "rn",
+          Seq(col("zkey").asc, col("l_partkey").asc, col("l_orderkey").asc), lit(1L), Prefix.Sum)
         .groupBy(expr(s"(rn - 1) * 16 DIV $nRows").as("b"))
         .agg(min("l_partkey").as("pk_min"), max("l_partkey").as("pk_max"),
           count(lit(1)).as("n"))
-      val lb = TwoPhaseRank.rowNumber(li, "rn", -1,
-          col("l_orderkey").asc, col("l_partkey").asc)
+      val lb = Prefix.scan(li, "rn",
+          Seq(col("l_orderkey").asc, col("l_partkey").asc), lit(1L), Prefix.Sum)
         .groupBy(expr(s"(rn - 1) * 16 DIV $nRows").as("b"))
         .agg(min("l_partkey").as("pk_min"), max("l_partkey").as("pk_max"),
           count(lit(1)).as("n"))

@@ -18,7 +18,7 @@ import graft.fixtures.RefFixtures._
   *    Inherently sequential (each placement depends on all prior ones);
   *    safe at 100 TB because directories ≪ files — the distributed part
   *    is the size aggregation, only the per-directory totals are collected.
-  *  - next-fit relaxation: a window cumulative sum, fully parallel,
+  *  - next-fit relaxation: a running sum (`Prefix.scan`), fully parallel,
   *    over-opens ≤2× bins worst case. This is the scale path.
   *
   * Oversized directories (> capacity) keep unit 0 — the reference recurses
@@ -40,49 +40,20 @@ object PackingOps {
        |sizes AS (SELECT parent_directory AS path, CAST(sum(length) AS BIGINT) AS size
        |          FROM invf GROUP BY parent_directory)""".stripMargin
 
-  /** Distributed next-fit assignment (path, size, unit): two-phase prefix
-    * sum — range-partition by path, cumsum within partitions, add
-    * per-partition offsets computed from the (tiny) per-partition totals.
-    * No single-partition stage; only one long per partition reaches the
-    * driver. Shared by pack_nextfit_dist and pack_units.
-    * `nParts <= 0` (the default) follows the session's shuffle parallelism;
-    * the unit assignment is identical for any partition count. `capacity`
-    * defaults to the Data-Box size; train_pack_sequences reuses the same
-    * prefix sum with a token budget. */
-  def nextFitDist(spark: SparkSession, sizes: DataFrame, nParts: Int = -1,
-      capacity: Long = Capacity): DataFrame = {
-    val n = if (nParts > 0) nParts else spark.sessionState.conf.numShufflePartitions
-    // persist the aggregated input FIRST: repartitionByRange runs a
-    // sampling job, which would otherwise recompute the whole upstream
-    // pipeline once more just to pick range boundaries
-    val sized = sizes
-      .withColumn("eff", when(col("size") > capacity, 0L).otherwise(col("size")))
-      .persist()
-    val ranged = sized.repartitionByRange(n, col("path"))
-      .withColumn("pid", spark_partition_id())
-      .persist() // pin partition assignment across the two passes
-    val offsets = ranged.groupBy("pid").agg(sum("eff").as("psum"))
-      .orderBy("pid").collect()
-      .scanLeft((-1, 0L)) { case ((_, acc), r) => (r.getInt(0), acc + r.getLong(1)) }
-    // the offsets action materialized `ranged`; drop the input cache now and
-    // hand the ranged cache to CacheTracker for release after the query's action
-    sized.unpersist(blocking = false)
-    graft.CacheTracker.track(ranged)
-    val offsetByPid = offsets.sliding(2).collect { case Array((_, prev), (pid, _)) =>
-      (pid, prev)
-    }.toSeq
-    import spark.implicits._
-    val offDf = offsetByPid.toDF("pid", "offset")
-    val w = Window.partitionBy("pid").orderBy("path")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ranged
-      .withColumn("local_cum", sum("eff").over(w))
-      .join(broadcast(offDf), Seq("pid"))
-      .withColumn("cum", col("local_cum") + col("offset"))
+  /** Distributed next-fit assignment (path, size, unit): the running sum
+    * of the packable sizes in path order ([[Prefix.scan]]: range partition,
+    * per-partition totals, one narrow seeded pass) — no single-partition
+    * stage; only one long per partition reaches the driver. Shared by
+    * pack_nextfit_dist and pack_units. `capacity` defaults to the Data-Box
+    * size; train_pack_sequences reuses the same prefix sum with a token
+    * budget. `spark` is unused; it is kept for callers. */
+  def nextFitDist(spark: SparkSession, sizes: DataFrame,
+      capacity: Long = Capacity): DataFrame =
+    Prefix.scan(sizes, "cum", Seq(col("path")),
+        when(col("size") > capacity, 0L).otherwise(col("size")), Prefix.Sum)
       .withColumn("unit", when(col("size") > capacity, lit(0L))
         .otherwise(expr(s"cum DIV ${capacity}L") + 1))
       .select("path", "size", "unit")
-  }
 
   /** Exact sequential first-fit (generate-file-list.py:32-43): place each
     * directory (in path order) into the first unit with room, else open a
@@ -135,8 +106,8 @@ object PackingOps {
     },
 
     // THE next-fit scale path (and the bench entry): a DISTRIBUTED prefix
-    // sum — range-partition by path, cumsum within partitions, add
-    // per-partition offsets computed from the (tiny) per-partition totals.
+    // sum (Prefix.scan) — range-partition by path, seed each partition
+    // with the (tiny) totals of the partitions before it, cumsum within.
     // Identical output to the global-window form above (the cross-check),
     // no single-partition stage; same oracle.
     GraftQuery("pack_nextfit_dist", {
@@ -247,7 +218,7 @@ object PackingOps {
     // excluded from both strategies and reported in their own column,
     // matching pack_nextfit's unit-0 convention. The cumsum windows run on
     // the DIRECTORY frame (bounded ≪ files; the row-scale next-fit lives
-    // in pack_nextfit_dist with the two-phase prefix sum).
+    // in pack_nextfit_dist with Prefix.scan).
     GraftQuery("pack_quality", {
       val cap = Capacity
       s"""WITH $SizesCte,

@@ -23,7 +23,7 @@ import graft.Tables
   * shuffled whole — pair generation rides the df-capped shingle bucket
   * join, decontamination broadcasts the (small by construction) eval gram
   * digest set, the split is a per-row hash of the cluster label, and
-  * packing is the distributed two-phase prefix sum. Intermediate
+  * packing is the distributed prefix sum (Prefix.scan). Intermediate
   * per-stage frames (survivors, kept docs, split assignment) are
   * persisted once and released after the action; every count branch
   * reads a cached frame, not a recomputed lineage.
@@ -149,8 +149,8 @@ object PipelineOps {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       graft.CacheTracker.track(spl)
 
-      // stage 8: pack the train slice into sequences (distributed two-phase
-      // prefix sum; %019d key keeps string range order == numeric order)
+      // stage 8: pack the train slice into sequences (distributed prefix
+      // sum, Prefix.scan; %019d key keeps string range order == numeric order)
       val ptoks = spl.filter(col("split") === "train").join(surv, Seq("doc_id"))
         .select(format_string("%019d", col("doc_id")).as("path"),
           size(expr("regexp_extract_all(text, '[a-z0-9]+', 0)")).cast("long").as("size"))

@@ -388,11 +388,10 @@ object StatsOps {
     // running max: p is dominated iff the best size among strictly
     // cheaper parts already ≥ p's, or an equal-price part is strictly
     // bigger — both terms read off ONE per-price aggregate (hash agg,
-    // output = distinct prices) plus a two-phase prefix max
-    // (TwoPhaseRank.prefixMaxDistinct: range partition + broadcast
-    // per-partition maxima; only one long per partition reaches the
-    // driver). No self-join, no quadratic dominance test, no global
-    // single-partition window. The oracle states the same running-max
+    // output = distinct prices) plus a strict prefix max (Prefix.scan:
+    // range partition, per-partition maxima; only one long per partition
+    // reaches the driver). No self-join, no quadratic dominance test, no
+    // global single-partition window. The oracle states the same running-max
     // identity with one ROWS-frame window.
     GraftQuery("mine_skyline",
       """WITH dp AS (SELECT p_retailprice AS price, CAST(max(p_size) AS BIGINT) AS msize
@@ -408,7 +407,8 @@ object StatsOps {
       val p = Tables.part(spark, sfDir)
         .select(col("p_partkey"), col("p_retailprice"), col("p_size").cast("long").as("p_size"))
       val dp = p.groupBy(col("p_retailprice").as("price")).agg(max("p_size").as("msize"))
-      val sp = TwoPhaseRank.prefixMaxDistinct(dp, "smax", col("price"), col("msize"))
+      val sp = Prefix.scan(dp, "smax", Seq(col("price")), col("msize"), Prefix.Max,
+        strict = true)
       p.join(sp, p("p_retailprice") === sp("price"))
         .filter(!(coalesce(col("smax") >= col("p_size"), lit(false)) ||
           col("msize") > col("p_size")))
@@ -545,8 +545,9 @@ object StatsOps {
     // EXACT global quantiles WITHOUT a global sort: the distributed
     // selection a fleet-level SLO/pricing report needs when
     // percentile_approx isn't contractual and `percentile()` would buffer
-    // a whole group per executor. Ranks come from the two-phase prefix
-    // rank (range partition → local rank → broadcast offsets), the target
+    // a whole group per executor. Ranks come from the distributed prefix
+    // count (Prefix.scan: range partition → per-partition counts → seeded
+    // local numbering), the target
     // positions are lower-quantile indices floor(q·(n−1))+1 (the
     // stats_rolling_robust convention), and the answer is a semi-join of
     // ≤ 6 positions against the ranked frame — no sort ever sees more
@@ -571,8 +572,8 @@ object StatsOps {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       graft.CacheTracker.track(c)
       val n = c.count()
-      val ranked = TwoPhaseRank.rowNumber(c, "rn", -1,
-        col("cents").asc, col("l_orderkey").asc, col("l_linenumber").asc)
+      val ranked = Prefix.scan(c, "rn",
+        Seq(col("cents").asc, col("l_orderkey").asc, col("l_linenumber").asc), lit(1L), Prefix.Sum)
       val pos = Seq(1L, 25L, 50L, 75L, 90L, 99L)
         .map(q => (q, q * (n - 1) / 100 + 1)).toDF("q_pct", "pos")
       ranked.join(broadcast(pos), col("rn") === col("pos"))

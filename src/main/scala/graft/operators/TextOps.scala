@@ -898,8 +898,8 @@ object TextOps {
     // largest documents — the Lorenz-curve deciles (and one driver-side
     // subtraction from a Gini) a data-mixing pipeline reads before
     // deciding length caps / sampling temperature. Docs rank by size
-    // descending through the DISTRIBUTED two-phase rank (no global
-    // window), the decile is the exact arithmetic NTILE (the orders_rfm
+    // descending through the DISTRIBUTED prefix count (Prefix.scan, no
+    // global window), the decile is the exact arithmetic NTILE (the orders_rfm
     // kernel with 10 tiles), and shares/cumulative shares are integer ppm
     // over the bounded 10-row frame. Decile 1 = the biggest docs; its
     // share_ppm IS the "top-10% concentration" headline number.
@@ -934,8 +934,8 @@ object TextOps {
       }
       require(n >= 10, s"concentration deciles need >= 10 docs, got $n")
       val q = n / 10; val rr = n % 10
-      val ranked = TwoPhaseRank.rowNumber(base, "rn", -1,
-        col("n_chars").desc, col("doc_id").asc)
+      val ranked = Prefix.scan(base, "rn",
+        Seq(col("n_chars").desc, col("doc_id").asc), lit(1L), Prefix.Sum)
       val g = ranked.select(col("n_chars"),
           expr(s"CASE WHEN rn <= ${rr * (q + 1)} THEN (rn + $q) DIV ${q + 1} " +
             s"ELSE $rr + (rn - ${rr * (q + 1)} + ${q - 1}) DIV $q END").as("decile"))
@@ -957,7 +957,7 @@ object TextOps {
     // number a tokenizer budget decision reads (where the curve flattens
     // is where growing the vocab stops paying) and the OOV-rate estimate
     // for any fixed vocab size. Types rank by (count desc, token) through
-    // the distributed two-phase rank; each k's mass is one filtered
+    // the distributed prefix count (Prefix.scan); each k's mass is one filtered
     // aggregation over the ranked vocab (bounded ≪ corpus — the type
     // table, not the token stream).
     GraftQuery("text_vocab_coverage",
@@ -984,8 +984,8 @@ object TextOps {
         val r = tf.agg(sum("cnt"), count(lit(1))).head()
         (r.getLong(0), r.getLong(1))
       }
-      val ranked = TwoPhaseRank.rowNumber(tf, "rn", -1,
-        col("cnt").desc, col("tok").asc)
+      val ranked = Prefix.scan(tf, "rn",
+        Seq(col("cnt").desc, col("tok").asc), lit(1L), Prefix.Sum)
       // data-adaptive vocab budgets: 1/16, 1/8, 1/4, 1/2 of the type count
       // (ceil), so the curve has shape at any corpus scale
       val ks = Seq(16L, 8L, 4L, 2L).map(d => (nTypes + d - 1) / d).distinct
@@ -1004,7 +1004,7 @@ object TextOps {
     // row's x/y are round(1000·log2(·)) of EXACT integers — deterministic
     // per row — and the regression runs on integer sums (the
     // stats_trend_ols discipline), so no float accumulation order can
-    // flip a bit. Rank via the distributed two-phase rank; the OLS frame
+    // flip a bit. Rank via the distributed Prefix.scan; the OLS frame
     // never exceeds the type vocabulary. Overflow bound: the n·Σxy moment
     // term reaches n²·(1000·log2 n)² — int64-safe to ~3e6 types (real
     // vocabularies); past that, pre-bucket ranks before the fit. The
@@ -1028,8 +1028,8 @@ object TextOps {
       val tf = docs(spark, sfDir)
         .select(explode(expr("regexp_extract_all(text, '[a-z0-9]+', 0)")).as("tok"))
         .groupBy("tok").agg(count(lit(1)).as("cnt"))
-      val xy = TwoPhaseRank.rowNumber(tf, "rn", -1,
-          col("cnt").desc, col("tok").asc)
+      val xy = Prefix.scan(tf, "rn",
+          Seq(col("cnt").desc, col("tok").asc), lit(1L), Prefix.Sum)
         .select(round(lit(1000) * log2(col("rn").cast("double"))).cast("long").as("x"),
           round(lit(1000) * log2(col("cnt").cast("double"))).cast("long").as("y"))
       xy.agg(count(lit(1)).as("n"), sum("x").as("sx"), sum("y").as("sy"),

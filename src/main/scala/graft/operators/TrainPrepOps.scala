@@ -161,9 +161,9 @@ object TrainPrepOps {
     // relaxation (a document whose final token lands exactly on a window
     // boundary starts the NEXT window — the same relaxation pack_nextfit
     // applies to Data-Box bins). It reuses the
-    // distributed two-phase prefix sum (PackingOps.nextFitDist) — range
-    // partition, local cumsum, broadcast per-partition offsets; no global
-    // single-partition window anywhere.
+    // distributed prefix sum (PackingOps.nextFitDist over Prefix.scan) —
+    // range partition, per-partition totals, seeded local cumsum; no
+    // global single-partition window anywhere.
     GraftQuery("train_pack_sequences",
       s"""WITH t AS (SELECT doc_id,
          |    CAST(len(regexp_extract_all(text, '[a-z0-9]+')) AS BIGINT) AS n_tokens
@@ -470,10 +470,10 @@ object TrainPrepOps {
     // deterministic global shuffle: every document gets a reproducible
     // training-order position = its rank under md5(doc_id) — the
     // hash-then-sort shuffle every epoch pipeline needs (same order on any
-    // cluster, any partitioning, any engine). The rank is the two-phase
-    // distributed prefix rank (range-partition on the hash, local
-    // row_number, broadcast per-partition offsets) — NO single-partition
-    // global window; only one long per partition reaches the driver.
+    // cluster, any partitioning, any engine). The rank is the distributed
+    // prefix count (Prefix.scan: range-partition on the hash, per-partition
+    // counts, seeded local numbering) — NO single-partition global window;
+    // only one long per partition reaches the driver.
     GraftQuery("train_shuffle_order",
       """SELECT doc_id,
         |       CAST(row_number() OVER (ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id)
@@ -482,7 +482,7 @@ object TrainPrepOps {
       val keyed = docs(spark, sfDir)
         .select(col("doc_id"),
           md5(col("doc_id").cast("string").cast("binary")).as("k"))
-      TwoPhaseRank.rowNumber(keyed, "pos", -1, col("k"), col("doc_id"))
+      Prefix.scan(keyed, "pos", Seq(col("k"), col("doc_id")), lit(1L), Prefix.Sum)
         .select(col("doc_id"), col("pos").cast("long").as("pos"))
         .orderBy("doc_id")
     },
@@ -497,8 +497,8 @@ object TrainPrepOps {
     // identical in both engines) with doc_id tiebreak. Scale shape: the
     // affinity table is keyed by eval∩corpus bigrams (benchmarks are small
     // by nature → broadcast), the corpus side is one linear scan + one
-    // per-doc aggregation, and the global rank is the two-phase prefix
-    // rank — no single-partition window, no all-pairs stage. Documents
+    // per-doc aggregation, and the global rank is the Prefix.scan
+    // count — no single-partition window, no all-pairs stage. Documents
     // with fewer than 2 tokens have no features and are unscoreable (not
     // emitted — both engines derive the population from the bigram rows).
     GraftQuery("train_dsir_select",
@@ -539,8 +539,8 @@ object TrainPrepOps {
       val aff = tc.join(rc, Seq("bg"))
         .select(col("bg"), expr("(ct * 1000000) DIV cr").as("a"))
       // persisted only to pin the frame between the k-count action and
-      // TwoPhaseRank's materialization (rowNumber itself unpersists its
-      // input after the range-sampling pass, so no tracker entry here)
+      // Prefix.scan's materialization (the scan itself unpersists its
+      // input after its fold pass, so no tracker entry here)
       val scored = bg.filter(!isEvalDoc)
         .join(broadcast(aff), Seq("bg"), "left")
         .groupBy("doc_id")
@@ -549,7 +549,7 @@ object TrainPrepOps {
         .withColumn("avgd", col("affinity").cast("double") / col("n_bigrams"))
         .persist()
       val k = math.ceil(0.1 * scored.count()).toLong
-      TwoPhaseRank.rowNumber(scored, "rnk", -1, col("avgd").desc, col("doc_id"))
+      Prefix.scan(scored, "rnk", Seq(col("avgd").desc, col("doc_id")), lit(1L), Prefix.Sum)
         .select(col("doc_id"), col("n_bigrams"), col("affinity"),
           // integer-exact published mean (a 2-dp float round can land on a
           // .xx5 boundary where the engines' round primitives disagree)
@@ -601,10 +601,9 @@ object TrainPrepOps {
     // data-derived) — the "best data under a token budget" op every
     // pretraining mix ends with (the greedy prefix is optimal for a
     // per-token quality objective). Quality = lexical diversity in ppm
-    // (distinct/total tokens), ties by doc_id; the global quality ordering
-    // uses the distributed two-phase rank and the budget prefix is ONE
-    // bounded window over per-rank-partition subtotals — same shape as
-    // pack_nextfit_dist, no single-partition cumsum. Report is per source:
+    // (distinct/total tokens), ties by doc_id; the budget prefix is ONE
+    // distributed running token sum in quality order (Prefix.scan) — same
+    // shape as pack_nextfit_dist, no single-partition cumsum. Report is per source:
     // how the budget redistributes the mix (diversity-ranked selection
     // systematically reweights sources — that's the number shipped).
     GraftQuery("train_token_budget",
@@ -630,7 +629,6 @@ object TrainPrepOps {
         |  CAST(sum(CASE WHEN keep THEN nt ELSE 0 END) * 1000000
         |       // CAST(sum(nt) AS BIGINT) AS BIGINT) AS sel_ppm
         |FROM sel GROUP BY source ORDER BY source""".stripMargin) { (spark, sfDir) =>
-      import spark.implicits._
       val f = Tables.documents(spark, sfDir)
         .withColumn("toks", expr("regexp_extract_all(text, '[a-z0-9]+', 0)"))
         .select(col("doc_id"), col("source"),
@@ -641,25 +639,11 @@ object TrainPrepOps {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       graft.CacheTracker.track(f)
       val budget = f.agg(sum("nt")).head().getLong(0) / 2
-      // distributed rank by quality, then the budget prefix: per-partition
-      // token subtotals (bounded: one long per partition) provide the
-      // cross-partition offsets, the ROWS window runs within partitions
-      val ranked = TwoPhaseRank.rowNumber(f, "rn", -1,
-          col("score_ppm").desc, col("doc_id").asc)
-        .repartitionByRange(col("rn"))
-        .withColumn("__pid", spark_partition_id())
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(ranked)
-      val offs = ranked.groupBy("__pid").agg(sum("nt").as("s"))
-        .orderBy("__pid").as[(Int, Long)].collect()
-      val offDf = offs.map(_._1)
-        .zip(offs.scanLeft(0L) { case (acc, (_, s)) => acc + s }.dropRight(1))
-        .toSeq.toDF("__pid", "__off")
-      val w = Window.partitionBy("__pid").orderBy("rn")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      ranked
-        .join(broadcast(offDf), Seq("__pid"))
-        .withColumn("keep", (sum("nt").over(w) + col("__off")) <= budget)
+      // one distributed prefix sum of tokens in quality order (ties by
+      // doc_id): the running total IS the budget test, no rank needed
+      Prefix.scan(f, "cum", Seq(col("score_ppm").desc, col("doc_id").asc),
+          col("nt"), Prefix.Sum)
+        .withColumn("keep", col("cum") <= budget)
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"), sum("nt").as("tok_total"),
           sum(when(col("keep"), 1L).otherwise(0L)).as("n_sel"),

@@ -11,7 +11,7 @@ import graft.operators.PackingOps
   * Deterministic seeded generation (no scalatestplus bridge offline). */
 class PackingSpec extends AnyFunSuite with CacheDrained {
 
-  // two-phase helpers persist-and-track; drain per test like the harness does
+  // Prefix.scan persists and tracks; drain per test like the harness does
   override def afterEach(): Unit = CacheTracker.releaseAll()
 
   private val capacity = 1000L
@@ -30,8 +30,8 @@ class PackingSpec extends AnyFunSuite with CacheDrained {
     // partitioning: the rank must be independent of physical layout
     val rows = Seq.fill(5000)((f"k${rnd.nextInt(800)}%04d", rnd.nextInt(50)))
     val df = rows.toDF("name", "depth").repartition(13, col("depth"))
-    val got = graft.operators.TwoPhaseRank
-      .rowNumber(df, "idx", 8, col("depth"), col("name"))
+    val got = graft.operators.Prefix
+      .scan(df, "idx", Seq(col("depth"), col("name")), lit(1L), graft.operators.Prefix.Sum)
       .orderBy("idx", "name")
       .select(col("idx"), col("name"), col("depth"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2)))

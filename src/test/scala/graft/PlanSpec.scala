@@ -208,12 +208,18 @@ class PlanSpec extends AnyFunSuite with CacheDrained {
   }
 
   test("distributed rank/prefix-sum queries have no single-partition exchange") {
-    Seq("pack_nextfit_dist", "phase_order_dirs", "train_shuffle_order").foreach { q =>
+    Seq("pack_nextfit_dist", "phase_order_dirs", "train_shuffle_order", "mine_skyline",
+      "train_token_budget").foreach { q =>
       val df = SparkEntry.queries(q)(TestSpark.spark, TestSpark.Sf)
       df.collect()
       val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
       assert(!p.contains("Exchange SinglePartition"),
         s"$q serializes through a single-partition exchange:\n$p")
+      // the prefix is one seeded pass over the range partitions: no window
+      // and no re-shuffle of the rows on their partition id
+      assert(!p.contains(" Window ["), s"$q runs a window operator:\n$p")
+      assert("hashpartitioning\\((?:__)?pid#".r.findFirstIn(p).isEmpty,
+        s"$q re-shuffles on the partition id:\n$p")
     }
   }
 

@@ -147,8 +147,8 @@ class StatsSpec extends AnyFunSuite with CacheDrained {
       .toDF("p_partkey", "p_retailprice", "p_size")
     val dp = pts.groupBy(col("p_retailprice").as("price"))
       .agg(max("p_size").as("msize"))
-    val sp = graft.operators.TwoPhaseRank
-      .prefixMaxDistinct(dp, "smax", col("price"), col("msize"))
+    val sp = graft.operators.Prefix.scan(dp, "smax", Seq(col("price")), col("msize"),
+      graft.operators.Prefix.Max, strict = true)
     // the strict prefix max is null exactly at the global minimum price
     val smax = sp.as[(Double, Long, Option[Long])].collect()
       .map { case (p, _, s) => p -> s }.toMap

@@ -42,7 +42,7 @@ object TestSpark {
 }
 
 /** Drains CacheTracker-tracked blocks after every test. Any spec that runs
-  * SparkEntry queries must mix this in: tracked persists (e.g. nextFitDist's
+  * SparkEntry queries must mix this in: tracked persists (e.g. Prefix.scan's
   * ranged frame under train_pack_sequences) otherwise accumulate in the
   * shared session until an unrelated suite happens to release them. */
 trait CacheDrained extends org.scalatest.BeforeAndAfterEach {
