@@ -1,7 +1,9 @@
 package graft.exec
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The reference's copy engine re-expressed on Spark's scheduler
   * (SURVEY.md §2.10, §3.3):
@@ -16,6 +18,14 @@ import org.apache.spark.sql.functions._
   *    quarantine DataFrame instead of the reference's silent skip (which
   *    could hang its queue.join barrier — copy-to-adls.py:93 note).
   *
+  * Every sink — each copy depth level, the copy's files, the owner remap,
+  * the compaction — runs through one helper, `sink`: the per-item body
+  * under the quarantine, its rows persisted and materialised by one
+  * `count()` job. So a side effect runs once per call, as the reference's
+  * run once per path; further actions on a returned frame, or a catalog
+  * clear, only read its rows, which the context cleaner reclaims once the
+  * frame is unreachable. Read-only [[verifyCopy]] stays a Dataset query.
+  *
   * At 100 TB the dirs phase is tiny (directories ≪ files) and the files
   * action is embarrassingly parallel; parallelism = partitions, the
   * `-m`/`--max-parallelism` knobs of the reference.
@@ -28,6 +38,18 @@ object CopyExecutor {
     * BLOCK_SIZE; BASELINE.md constant). chunk_plan (PackingOps) is the
     * oracled schedule of exactly this loop's (offset, len) pairs. */
   val BlockSize: Long = 20L * 1024 * 1024
+
+  /** The sink runner (see the header): `body` once per item, an item's
+    * `Exception` quarantined as a `failed` row for `name(item)`. */
+  private def sink[T](items: RDD[T])(name: T => String)(
+      body: T => CopyResult): RDD[CopyResult] = {
+    val out = items.map { t =>
+      try body(t)
+      catch { case e: Exception => CopyResult(name(t), "failed", String.valueOf(e.getMessage)) }
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+    out.count()
+    out
+  }
 
   /** The reference's copy inner loop (copy-to-adls.py:55-91), one file:
     * create the destination, then for each offset in range(0, length,
@@ -75,10 +97,7 @@ object CopyExecutor {
     * Catalyst planning; a Dataset query per level would pay for planning,
     * an AQE stage and an exchange at every barrier.
     *
-    * Result lifetime: the per-item results are persisted RDDs that live
-    * as long as the returned frame. Further actions on it only read them,
-    * `spark.catalog.clearCache()` does not re-run the copy, and the
-    * context cleaner reclaims them once the frame is unreachable. */
+    * Result lifetime: that of every sink (see the header). */
   def copyInventory(
       spark: SparkSession,
       inventory: DataFrame,
@@ -88,7 +107,6 @@ object CopyExecutor {
       blockSize: Long = BlockSize,
       preflight: Boolean = false): DataFrame = {
     import spark.implicits._
-    val keep = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
     // phase 1: dirs, shallowest level first; a level's job completes
     // before the next starts, so parents exist before children. Only the
@@ -97,60 +115,46 @@ object CopyExecutor {
       .select(length(col("name")) - length(regexp_replace(col("name"), "/", "")),
         col("name"), col("owner"), col("grp"), col("perms"))
       .as[(Int, String, String, String, String)]
-      .rdd.repartition(parallelism).persist(keep)
+      .rdd.repartition(parallelism).persist(StorageLevel.MEMORY_AND_DISK)
     val depths = dirs.map(_._1).distinct().collect().sorted
     val levels = depths.toSeq.map { d =>
-      val level = dirs.filter(_._1 == d).map { case (_, name, owner, grp, perms) =>
-        try {
+      sink(dirs.filter(_._1 == d))(_._2) {
+        case (_, name, owner, grp, perms) =>
           ops.mkdirs(name)
           ops.setOwnership(name, owner, grp, perms)
           CopyResult(name, "ok", "dir")
-        } catch {
-          case e: Exception => CopyResult(name, "failed", String.valueOf(e.getMessage))
-        }
-      }.persist(keep)
-      level.count() // the per-level barrier: parents before children
-      level
+      }
     }
     dirs.unpersist(blocking = false)
 
-    // phase 2: files, partition-parallel
-    val files = inventory.filter(!col("is_folder"))
-      .select("name", "owner", "grp", "perms", "length")
-      .as[(String, String, String, String, Long)]
-      .rdd.repartition(parallelism)
-      .map { case (name, owner, grp, perms, len) =>
-        try {
-          // the byte length this copy will land on disk: the declared
-          // inventory length on the chunked path, the stub size otherwise
-          val physLen = if (source.isDefined) len else (len % 4096).max(1)
-          if (preflight && ops.exists(name) && ops.length(name) == physLen) {
-            CopyResult(name, "skipped", "preflight: exists at expected length")
-          } else {
-            val detail = source match {
-              case Some(src) =>
-                val chunks = copyChunked(src, ops, name, len, blockSize)
-                s"file chunks=$chunks"
-              case None =>
-                // no byte store behind this inventory: deterministic stub
-                // payload so the metadata path still lands real files
-                ops.write(name, new Array[Byte](physLen.toInt))
-                "file"
-            }
-            ops.setOwnership(name, owner, grp, perms)
-            CopyResult(name, "ok", detail)
+    // phase 2: files, partition-parallel; task-level retries are
+    // idempotent-overwrite by design (createFile truncates, so a retried
+    // file restarts from offset 0)
+    val files = sink(inventory.filter(!col("is_folder"))
+        .select("name", "owner", "grp", "perms", "length")
+        .as[(String, String, String, String, Long)]
+        .rdd.repartition(parallelism))(_._1) {
+      case (name, owner, grp, perms, len) =>
+        // the byte length this copy will land on disk: the declared
+        // inventory length on the chunked path, the stub size otherwise
+        val physLen = if (source.isDefined) len else (len % 4096).max(1)
+        if (preflight && ops.exists(name) && ops.length(name) == physLen) {
+          CopyResult(name, "skipped", "preflight: exists at expected length")
+        } else {
+          val detail = source match {
+            case Some(src) =>
+              val chunks = copyChunked(src, ops, name, len, blockSize)
+              s"file chunks=$chunks"
+            case None =>
+              // no byte store behind this inventory: deterministic stub
+              // payload so the metadata path still lands real files
+              ops.write(name, new Array[Byte](physLen.toInt))
+              "file"
           }
-        } catch {
-          case e: Exception => CopyResult(name, "failed", String.valueOf(e.getMessage))
+          ops.setOwnership(name, owner, grp, perms)
+          CopyResult(name, "ok", detail)
         }
-      }
-      // materialize the side-effecting stage exactly once: without this,
-      // every downstream action on the returned frame would re-run the
-      // writes (benign for idempotent overwrites, wrong for append/flush
-      // sinks); task-level retries remain idempotent-overwrite by design
-      // (createFile truncates, so a retried file restarts from offset 0)
-      .persist(keep)
-    files.count()
+    }
 
     spark.sparkContext.union(files +: levels).toDF()
   }
@@ -277,8 +281,6 @@ object CopyExecutor {
     (results, verifyCopy(spark, inventory, ops, parallelism))
   }
 
-  final case class CompactResult(path: String, status: String, detail: String)
-
   /** Small-files compaction groups — the executable form of the
     * `layout_compact_plan` query: per (directory, group) the member file
     * names IN NAME ORDER plus the group byte total. Same window cumsum
@@ -305,41 +307,33 @@ object CopyExecutor {
     * shipping a torn artifact; per-file read failures quarantine as
     * `failed`. Groups are independent and byte-bounded by the planner, so
     * the fan-out is partition-parallel with bounded task memory — the
-    * executor half the layout tier's planner queries feed at 100 TB. */
+    * executor half the layout tier's planner queries feed at 100 TB.
+    *
+    * Job shape: one RDD job of `parallelism` tasks after the group plan's
+    * own jobs. Further actions on the result only read its rows; they
+    * never re-create an artifact another reader may already hold. */
   def compactExecute(
       spark: SparkSession,
       groups: DataFrame,
       ops: FileOps,
       parallelism: Int = 8): DataFrame = {
     import spark.implicits._
-    groups
-      .select(col("parent_directory"), col("grp_id"), col("names"), col("grp_bytes"))
-      .repartition(parallelism)
-      .as[(String, Long, Seq[String], Long)]
-      .mapPartitions { it =>
-        it.map { case (dir, grp, names, planned) =>
-          val out = s"$dir/.compact-$grp"
-          try {
-            ops.createFile(out)
-            var off = 0L
-            names.foreach { n =>
-              val data = ops.read(n)
-              ops.append(out, off, data)
-              off += data.length
-            }
-            ops.flush(out, off)
-            if (off == planned)
-              CompactResult(out, "ok", s"files=${names.size} bytes=$off")
-            else
-              CompactResult(out, "mismatch",
-                s"landed $off bytes, plan said $planned")
-          } catch {
-            case e: Exception =>
-              CompactResult(out, "failed", String.valueOf(e.getMessage))
-          }
-        }
+    sink(groups
+        .select(concat(col("parent_directory"), lit("/.compact-"), col("grp_id")),
+          col("names"), col("grp_bytes"))
+        .as[(String, Seq[String], Long)]
+        .rdd.repartition(parallelism))(_._1) { case (out, names, planned) =>
+      ops.createFile(out)
+      var off = 0L
+      names.foreach { n =>
+        val data = ops.read(n)
+        ops.append(out, off, data)
+        off += data.length
       }
-      .toDF()
+      ops.flush(out, off)
+      if (off == planned) CopyResult(out, "ok", s"files=${names.size} bytes=$off")
+      else CopyResult(out, "mismatch", s"landed $off bytes, plan said $planned")
+    }.toDF("path", "status", "detail")
   }
 
   /** Op 13 end-to-end: apply an identity remap (the inv_remap_owners
@@ -350,7 +344,11 @@ object CopyExecutor {
     * to the updated permissions JSON, and assert hdi_isfolder on folders
     * — then one whole-map setMetadata call (the single `comp=metadata`
     * PUT). Unchanged paths are not touched at all. Returns per-item
-    * status with the quarantine semantics of every other sink. */
+    * status with the quarantine semantics of every other sink.
+    *
+    * Job shape: one RDD job of `parallelism` tasks after the join's own
+    * jobs. Further actions on the result only read its rows, so a changed
+    * path gets one `setMetadata` per call. */
   def applyOwnerRemap(
       spark: SparkSession,
       inventory: DataFrame,
@@ -358,29 +356,22 @@ object CopyExecutor {
       ops: FileOps,
       parallelism: Int = 8): DataFrame = {
     import spark.implicits._
-    inventory.select("name", "is_folder", "perms")
-      .join(remapped.filter(col("changed"))
-        .select("name", "new_owner", "new_grp"), Seq("name"))
-      .repartition(parallelism)
-      .as[(String, Boolean, String, String, String)]
-      .mapPartitions { it =>
-        it.map { case (name, isFolder, perms, newOwner, newGrp) =>
-          try {
-            val kept = ops.getMetadata(name) --
-              Seq(FileOps.MetaPermissions, FileOps.MetaIsFolder)
-            val perm =
-              s"""{"owner":"$newOwner","group":"$newGrp","permissions":"$perms"}"""
-            val merged = kept +
-              (FileOps.MetaPermissions -> perm) ++
-              (if (isFolder) Map(FileOps.MetaIsFolder -> "true") else Map.empty)
-            ops.setMetadata(name, merged)
-            CopyResult(name, "ok", s"metadata keys=${merged.size}")
-          } catch {
-            case e: Exception => CopyResult(name, "failed", String.valueOf(e.getMessage))
-          }
-        }
-      }
-      .toDF()
+    sink(inventory.select("name", "is_folder", "perms")
+        .join(remapped.filter(col("changed"))
+          .select("name", "new_owner", "new_grp"), Seq("name"))
+        .as[(String, Boolean, String, String, String)]
+        .rdd.repartition(parallelism))(_._1) {
+      case (name, isFolder, perms, newOwner, newGrp) =>
+        val kept = ops.getMetadata(name) --
+          Seq(FileOps.MetaPermissions, FileOps.MetaIsFolder)
+        val perm =
+          s"""{"owner":"$newOwner","group":"$newGrp","permissions":"$perms"}"""
+        val merged = kept +
+          (FileOps.MetaPermissions -> perm) ++
+          (if (isFolder) Map(FileOps.MetaIsFolder -> "true") else Map.empty)
+        ops.setMetadata(name, merged)
+        CopyResult(name, "ok", s"metadata keys=${merged.size}")
+    }.toDF()
   }
 
   final case class UnitRun(unit: Long, nPaths: Long, startMs: Long, endMs: Long,
@@ -393,8 +384,9 @@ object CopyExecutor {
     * group (cancelable per unit, visible per unit in the UI), the direct
     * analogue of one `-async` distcp submission per Data Box filelist.
     * Returns per-unit timing so callers (and the spec) can observe the
-    * overlap. */
-  /** `preflight = true` re-runs idempotently (distcp-to-databox.sh:20-26:
+    * overlap.
+    *
+    * `preflight = true` re-runs idempotently (distcp-to-databox.sh:20-26:
     * `hadoop fs -test -e` before each distcp submission): paths whose
     * `_copied` marker already exists are skipped, counted in
     * [[UnitRun.nSkipped]], so resubmitting after a partial run pays only

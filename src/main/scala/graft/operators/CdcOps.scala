@@ -20,8 +20,6 @@ import graft.Tables
 object CdcOps {
 
   private val OrderCols = Seq("us", "event_type", "event_id")
-  private val streamRunId = new java.util.concurrent.atomic.AtomicLong()
-
   val queries: Seq[GraftQuery] = Seq(
 
     // SCD2 history build: collapse consecutive duplicate states per entity
@@ -232,7 +230,7 @@ object CdcOps {
       val closed = graft.streaming.StreamOps.scd2Intervals(spark,
         graft.streaming.StreamOps.eventStream(spark, sfDir))
       graft.streaming.StreamOps
-        .runAppendToCompletion(closed, s"stream_scd2_${streamRunId.incrementAndGet()}")
+        .runAppendToCompletion(closed, "stream_scd2")
         .orderBy("user_id", "valid_from_us", "state")
     },
 

@@ -137,8 +137,6 @@ object CleanOps {
       |    || CASE WHEN doc_id % 11 = 0 THEN ' id 123-45-6789 on file' ELSE '' END AS t
       |  FROM documents""".stripMargin
 
-  private val StreamRunId = new java.util.concurrent.atomic.AtomicLong()
-
   /** the redact projection shared by the batch query and its streaming
     * twin: stateless, per-row, append-safe */
   private def piiRedactFrame(enriched: DataFrame): DataFrame =
@@ -213,7 +211,7 @@ object CleanOps {
       val out = piiRedactFrame(withPii(
         graft.streaming.StreamOps.docStream(spark, sfDir)))
       graft.streaming.StreamOps.runAppendToCompletion(out,
-        s"stream_pii_redact_${StreamRunId.incrementAndGet()}")
+        "stream_pii_redact")
         .orderBy("doc_id")
     },
 
@@ -242,7 +240,7 @@ object CleanOps {
           size(keptArr).cast("long").as("n_kept"),
           md5(array_join(keptArr, "\n")).as("clean_md5"))
       graft.streaming.StreamOps.runAppendToCompletion(out,
-        s"stream_strip_boilerplate_${StreamRunId.incrementAndGet()}")
+        "stream_strip_boilerplate")
         .orderBy("doc_id")
     }
   )

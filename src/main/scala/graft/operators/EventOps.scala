@@ -62,8 +62,6 @@ object EventOps {
     d
   }
 
-  private val streamRunId = new java.util.concurrent.atomic.AtomicLong(0L)
-
   val queries: Seq[GraftQuery] = Seq(
 
     // real-data JSON decode (op 30h on the events.props column)
@@ -230,7 +228,7 @@ object EventOps {
       val closed = graft.streaming.StreamOps.cusumDaily(spark,
         graft.streaming.StreamOps.eventStream(spark, sfDir), refs)
       graft.streaming.StreamOps
-        .runAppendToCompletion(closed, s"stream_cusum_${streamRunId.incrementAndGet()}")
+        .runAppendToCompletion(closed, "stream_cusum")
         .orderBy("event_type", "day")
     },
 
@@ -1021,7 +1019,7 @@ object EventOps {
       graft.streaming.StreamOps.runAppendToCompletion(
         graft.streaming.StreamOps.statefulFunnel(spark,
           graft.streaming.StreamOps.eventStream(spark, sfDir)),
-        s"stream_funnel_${streamRunId.incrementAndGet()}")
+        "stream_funnel")
         .orderBy("user_id")
     },
 
@@ -1052,7 +1050,7 @@ object EventOps {
       val emitted = graft.streaming.StreamOps.runAppendToCompletion(
         graft.streaming.StreamOps.timeToConvert(spark,
           graft.streaming.StreamOps.eventStream(spark, sfDir)),
-        s"stream_ttc_${streamRunId.incrementAndGet()}")
+        "stream_ttc")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       graft.CacheTracker.track(emitted)
       val nconv = emitted.count()

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Distributed prefix scan: appends `outCol` = the running `agg` of `value`
   * over the rows in `sortCols` order — the column that
@@ -32,8 +33,10 @@ object Prefix {
     val spark = df.sparkSession
     val nParts = spark.sessionState.conf.numShufflePartitions
     // persist the input FIRST so repartitionByRange's boundary-sampling job
-    // reads the cache instead of recomputing the upstream pipeline
-    val input = df.persist()
+    // reads the cache instead of recomputing the upstream pipeline — unless
+    // the caller already cached it, whose cache is the caller's to release
+    val ownInput = df.storageLevel == StorageLevel.NONE
+    val input = if (ownInput) df.persist() else df
     val ranged = input.repartitionByRange(nParts, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
       .withColumn("__pid", spark_partition_id())
@@ -55,7 +58,7 @@ object Prefix {
     // the folds job materialized `ranged`; the input cache is done. `ranged`
     // backs the returned (lazy) frame, so its release is deferred to
     // graft.CacheTracker.releaseAll() after the query's action.
-    input.unpersist(blocking = false)
+    if (ownInput) input.unpersist(blocking = false)
     graft.CacheTracker.track(ranged)
     // seeds(p) = fold over every partition before p (None: no value yet)
     val seeds = (0 until nParts).scanLeft(Option.empty[Long]) { (acc, p) =>

@@ -50,8 +50,6 @@ object SimilarityOps {
     * would prefer. */
   val MaxNearDupTables = 256
 
-  private val StreamRunSeq = new java.util.concurrent.atomic.AtomicLong()
-
   /** Derive the LSH shape (tables, bits) for a threshold — and, when the
     * corpus size is known, for that size.
     *
@@ -1430,7 +1428,7 @@ object SimilarityOps {
       val out = s.select(col("vec_id"),
         graft.functions.CentroidArgmin.centroidArgmin(col("embedding"), cb).as("cluster"))
       graft.streaming.StreamOps.runAppendToCompletion(out,
-        s"stream_kmeans_assign_${StreamRunSeq.incrementAndGet()}")
+        "stream_kmeans_assign")
         .orderBy("vec_id")
     },
 

@@ -334,7 +334,7 @@ object SketchOps {
       val cells = graft.streaming.StreamOps.countMinCells(
         graft.streaming.StreamOps.eventStream(spark, sfDir))
       graft.streaming.StreamOps
-        .runToCompletion(cells, s"stream_cm_${streamRunId.incrementAndGet()}")
+        .runToCompletion(cells, "stream_cm")
         .select(col("row").cast("int").as("rw"), col("bk"), col("n"))
         .orderBy("rw", "bk")
     },
@@ -488,7 +488,7 @@ object SketchOps {
       val words = graft.streaming.StreamOps.bloomFilterWords(
         graft.streaming.StreamOps.eventStream(spark, sfDir))
       graft.streaming.StreamOps
-        .runToCompletion(words, s"stream_bloom_${streamRunId.incrementAndGet()}")
+        .runToCompletion(words, "stream_bloom")
         .orderBy("word")
     },
 
@@ -505,7 +505,7 @@ object SketchOps {
       val regs = graft.streaming.StreamOps.hllRegisters(
         graft.streaming.StreamOps.eventStream(spark, sfDir))
       graft.streaming.StreamOps
-        .runToCompletion(regs, s"stream_hll_${streamRunId.incrementAndGet()}")
+        .runToCompletion(regs, "stream_hll")
         .orderBy("bucket")
     },
 
@@ -540,13 +540,9 @@ object SketchOps {
       val bins = histBins(
         eventCents(graft.streaming.StreamOps.eventStream(spark, sfDir)), spec)
       val drained = graft.streaming.StreamOps
-        .runToCompletion(bins, s"stream_hist_${streamRunId.incrementAndGet()}")
+        .runToCompletion(bins, "stream_hist")
       histQuantiles(drained, spec)
     })
-
-  /** memory-sink names must be fresh per invocation (RunOne re-runs a
-    * query three times in one session) */
-  private val streamRunId = new java.util.concurrent.atomic.AtomicLong()
 
   // ---- deterministic equi-width histogram sketch (quantiles) ----
 

@@ -80,9 +80,7 @@ object TopKOps {
       val top = graft.streaming.StreamOps.topKPerKey(spark,
         graft.streaming.StreamOps.eventStream(spark, sfDir), 3)
       graft.streaming.StreamOps
-        .runAppendToCompletion(top, s"stream_topk_${streamRunId.incrementAndGet()}")
+        .runAppendToCompletion(top, "stream_topk")
         .orderBy("user_id", "rnk")
     })
-
-  private val streamRunId = new java.util.concurrent.atomic.AtomicLong()
 }

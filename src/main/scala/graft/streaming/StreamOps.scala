@@ -450,26 +450,24 @@ object StreamOps {
     graft.operators.SketchOps.bloomWords(
       events.filter(col("event_type") === "purchase"), col("user_id"))
 
-  def runToCompletion(df: DataFrame, queryName: String): DataFrame = {
-    val q = df.writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    df.sparkSession.table(queryName)
-  }
+  /** memory-sink names must be fresh per run (RunOne re-runs a query
+    * three times in one session): one process-wide sequence for all */
+  private val runSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Drains `df` to completion (Trigger.AvailableNow) into a memory sink
+    * named `queryName` plus `_<n>` from one process-wide sequence, and
+    * returns that sink's table. */
+  def runToCompletion(df: DataFrame, queryName: String): DataFrame =
+    drain(df, queryName, OutputMode.Complete())
 
   /** append-mode runner (needed for flatMapGroupsWithState in Append) */
-  def runAppendToCompletion(df: DataFrame, queryName: String): DataFrame = {
-    val q = df.writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    df.sparkSession.table(queryName)
+  def runAppendToCompletion(df: DataFrame, queryName: String): DataFrame =
+    drain(df, queryName, OutputMode.Append())
+
+  private def drain(df: DataFrame, queryName: String, mode: OutputMode): DataFrame = {
+    val name = s"${queryName}_${runSeq.incrementAndGet()}"
+    df.writeStream.outputMode(mode).format("memory").queryName(name)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    df.sparkSession.table(name)
   }
 }

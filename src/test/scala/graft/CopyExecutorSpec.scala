@@ -26,8 +26,12 @@ final class TracingFileOps(inner: FileOps) extends FileOps {
     CallTrace.calls.add(s"mkdir:$path"); inner.mkdirs(path)
   }
   override def exists(path: String): Boolean = inner.exists(path)
-  override def write(path: String, content: Array[Byte]): Unit =
-    inner.write(path, content)
+  override def write(path: String, content: Array[Byte]): Unit = {
+    CallTrace.calls.add(s"write:$path"); inner.write(path, content)
+  }
+  override def getMetadata(path: String): Map[String, String] = {
+    CallTrace.calls.add(s"getMetadata:$path"); inner.getMetadata(path)
+  }
   override def read(path: String): Array[Byte] = inner.read(path)
   override def setOwnership(p: String, o: String, g: String, m: String): Unit =
     inner.setOwnership(p, o, g, m)
@@ -502,7 +506,7 @@ class CopyExecutorSpec extends AnyFunSuite with CacheDrained {
     val spark = TestSpark.spark
     import org.apache.spark.sql.functions.col
     val tmp = Files.createTempDirectory("graft-meta").toString
-    val ops = new HadoopFileOps(s"file://$tmp")
+    val ops = new TracingFileOps(new HadoopFileOps(s"file://$tmp"))
     val inv = RefFixtures.inventory(spark, TestSpark.Sf)
       .filter(col("parent_directory") === "/data/part=8" or col("name") === "/data/part=8")
     CopyExecutor.copyInventory(spark, inv, ops, parallelism = 2)
@@ -525,9 +529,17 @@ class CopyExecutorSpec extends AnyFunSuite with CacheDrained {
     ops.setMetadata(target, Map("project" -> "alpha",
       graft.exec.FileOps.MetaPermissions -> """{"owner":"stale"}"""))
 
+    CallTrace.reset()
     val status = CopyExecutor.applyOwnerRemap(spark, inv, remapped, ops, parallelism = 2)
     assert(status.filter(col("status") =!= "ok").count() == 0)
     assert(status.count() == remapped.filter(col("changed")).count())
+    // the merge ran exactly once per changed path, however many actions
+    // read the result: one metadata read and one `.meta` write each
+    val changedPaths = status.collect().map(_.getString(0)).sorted.toSeq
+    val calls = CallTrace.list
+    assert(calls.filter(_.startsWith("write:")).sorted == changedPaths.map(p => s"write:$p.meta"),
+      s"remap re-ran: ${calls.count(_.startsWith("write:"))} .meta writes for ${changedPaths.size} paths")
+    assert(calls.filter(_.startsWith("getMetadata:")).sorted == changedPaths.map(p => s"getMetadata:$p"))
 
     val meta = ops.getMetadata(target)
     assert(meta("project") == "alpha", s"custom key lost: $meta")
@@ -579,7 +591,7 @@ class CopyExecutorSpec extends AnyFunSuite with CacheDrained {
     val spark = TestSpark.spark
     import spark.implicits._
     val tmp = Files.createTempDirectory("graft-compact").toString
-    val ops = new HadoopFileOps(s"file://$tmp")
+    val ops = new TracingFileOps(new HadoopFileOps(s"file://$tmp"))
     // two dirs of small files with deterministic distinct payloads
     val files = for (d <- Seq("/a", "/b"); i <- 0 until 7)
       yield (s"$d/f$i", d, (i + 1) * 100)
@@ -591,9 +603,17 @@ class CopyExecutorSpec extends AnyFunSuite with CacheDrained {
       .withColumn("length", org.apache.spark.sql.functions.col("length")
         .cast("long"))
     val groups = CopyExecutor.compactionGroups(invf, targetBytes = 900L)
+    CallTrace.reset()
     val res = CopyExecutor.compactExecute(spark, groups, ops, parallelism = 2)
     val statuses = res.collect().map(r => (r.getString(0), r.getString(1))).toMap
     assert(statuses.values.forall(_ == "ok"), s"unexpected statuses: $statuses")
+    // a second action only reads the result: no artifact is re-created
+    val creates = CallTrace.list.count(_.startsWith("create:"))
+    assert(creates == statuses.size)
+    assert(res.count() == statuses.size)
+    assert(CallTrace.list.count(_.startsWith("create:")) == creates,
+      s"a second action re-ran the compaction: $creates creates, then " +
+        CallTrace.list.count(_.startsWith("create:")))
     // every group artifact is the in-name-order concatenation of its members
     groups.collect().foreach { r =>
       val dir = r.getString(0)

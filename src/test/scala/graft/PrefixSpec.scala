@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Prefix
@@ -81,5 +82,15 @@ class PrefixSpec extends AnyFunSuite with CacheDrained {
 
   test("strict Max equals the global window max over the rows strictly before") {
     check(Prefix.Max, strict = true, col("v"))
+  }
+
+  test("a caller's persisted input is still cached after the scan and an action") {
+    val df = TestSpark.spark.range(0, 1000).toDF("v").persist()
+    try {
+      assert(df.count() == 1000)
+      val got = Prefix.scan(df, "out", Seq(col("v")), col("v"), Prefix.Sum)
+      assert(got.count() == 1000)
+      assert(df.storageLevel != StorageLevel.NONE, "scan dropped the caller's cache")
+    } finally df.unpersist(blocking = true)
   }
 }
