@@ -1,24 +1,42 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
-/** Registry for per-query persisted helper frames (Prefix.scan's ranged
-  * frames, label-propagation edge lists, ...). Helpers `track` what they persist;
-  * the harness (Verify and Bench after each query's action; the specs that
-  * exercise tracked helpers in an afterEach) calls `releaseAll()`, so
-  * repeated query runs in one session do not accumulate cached blocks for
-  * the session's lifetime.
+/** The one place that decides how long a cached frame lives. Three
+  * lifetimes:
   *
-  * Deliberately NOT tracked: the dedup family's memoized per-document
-  * shingle frame (DedupOps.docShingles) — that cache is the family's
-  * shared amortization across queries and is bounded at one small row per
-  * document.
+  *  - per query: helpers cache through [[persist]], which pins the frame at
+  *    MEMORY_AND_DISK and registers it; the harness (Verify and Bench after
+  *    each query's action, Plans and RunOne per run, the specs that exercise
+  *    such helpers in an afterEach) calls [[releaseAll]], so repeated query
+  *    runs in one session do not accumulate cached blocks;
+  *  - checkpointed: localCheckpoint()ed frames go through
+  *    [[trackCheckpointed]] and are released by the same [[releaseAll]];
+  *  - session: five memoized family frames are cached with a plain
+  *    `persist` and never released here, because each is the family's
+  *    shared amortization across queries and is bounded small —
+  *    `RankOps.coPurchaseEdges` and `RankOps.weightedCoPurchase`,
+  *    `RefFixtures.aclRecords`, `DedupOps.docShingles` and
+  *    `StreamOps.decontamMatches`' eval-gram frame.
+  *
+  * Operators that cache and release a frame inside their own method
+  * (`Prefix.scan`'s input, the label-propagation edge lists in GraphOps,
+  * CopyExecutor's RDDs) persist and unpersist it themselves.
   */
 object CacheTracker {
   private val tracked = new java.util.concurrent.ConcurrentLinkedQueue[Boolean => Unit]()
 
-  /** register a persisted frame for release after the current query */
-  def track(df: DataFrame): DataFrame = { tracked.add(b => df.unpersist(b)); df }
+  private def track(df: DataFrame): DataFrame = { tracked.add(b => df.unpersist(b)); df }
+
+  /** cache `df` for the current query: persisted MEMORY_AND_DISK and
+    * released by the next [[releaseAll]]. A frame that is already cached
+    * (by the caller, by a session memo, or as an identical plan earlier
+    * in the query) is returned untouched and not registered, so a release
+    * never drops a cache this call did not make. */
+  def persist(df: DataFrame): DataFrame =
+    if (df.storageLevel != StorageLevel.NONE) df
+    else track(df.persist(StorageLevel.MEMORY_AND_DISK))
 
   /** register a localCheckpoint()ed frame. Its blocks belong to the
     * checkpointed RDD, which `DataFrame.unpersist` does not reach (the

@@ -300,11 +300,9 @@ object DedupOps {
       val cand = bands.alias("x").join(bands.alias("y"), Seq("bandkey"))
         .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
         .filter(col("a") < col("b")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(cand)
+        .transform(graft.CacheTracker.persist)
       val exact = thresholdPairs(spark, sfDir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(exact)
+        .transform(graft.CacheTracker.persist)
       val tp = cand.join(exact, Seq("a", "b"), "left_semi")
       cand.agg(count(lit(1)).as("n_cand"))
         .join(exact.agg(count(lit(1)).as("n_true")))

@@ -57,8 +57,7 @@ object EventOps {
         expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000").as("day"),
         expr("CAST(floor(value * 1000000) AS BIGINT)").as("vu"))
       .groupBy("event_type", "day").agg(sum("vu").as("x"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.CacheTracker.track(d)
+      .transform(graft.CacheTracker.persist)
     d
   }
 
@@ -618,8 +617,7 @@ object EventOps {
           expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000").as("day"))
         .groupBy("user_id")
         .agg(min("day").as("first_d"), max("day").as("last_d"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(u)
+        .transform(graft.CacheTracker.persist)
       val h = u.agg(max("last_d").as("horizon"))
       val g = u.crossJoin(broadcast(h))
         .select((col("last_d") - col("first_d")).as("k"),
@@ -718,8 +716,7 @@ object EventOps {
         .filter(col("src").isNotNull && col("us") - col("prev_us") < GapUs)
         .select(col("src"), col("event_type").as("dst"),
           expr("us DIV 86400000000").as("d"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(p)
+        .transform(graft.CacheTracker.persist)
       val t = p.agg(expr("(min(d) + max(d)) DIV 2").as("split_d"))
       val wPred = Window.partitionBy("src").orderBy(col("c").desc, col("dst"))
       val pr = p.join(broadcast(t)).filter(col("d") < col("split_d"))
@@ -813,8 +810,7 @@ object EventOps {
         .join(s, "user_id").filter(col("d") >= col("sd"))
         .groupBy("user_id").agg(min("d").as("pd"), min("sd").as("sd0"))
       val g = p.select((col("pd") - col("sd0")).as("k"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(g)
+        .transform(graft.CacheTracker.persist)
       val nconv = g.count()
       val w = Window.orderBy("k")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -932,8 +928,7 @@ object EventOps {
           expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000").as("day"),
           floor(col("value") * 100).cast("long").as("cents"))
         .groupBy("event_type", "day").agg(sum("cents").as("x"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(d)
+        .transform(graft.CacheTracker.persist)
       val m = d.select(col("event_type").as("m_type"), expr("day % 7").as("dow"),
           col("x"))
         .groupBy("m_type", "dow")
@@ -942,8 +937,7 @@ object EventOps {
           col("event_type") === col("m_type") && expr("day % 7") === col("dow"))
         .select(col("event_type"), col("day"), col("x"),
           (col("x") * col("c") - col("s")).as("res_c"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(r)
+        .transform(graft.CacheTracker.persist)
       val st = r.groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("res_c").as("sr"),
           sum(col("res_c") * col("res_c")).as("srr"))
@@ -983,8 +977,7 @@ object EventOps {
         .select(col("user_id"),
           expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000").as("d"))
         .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(e)
+        .transform(graft.CacheTracker.persist)
       val days = e.select(col("d").as("day")).distinct()
       val dau = e.groupBy(col("d").as("day")).agg(count(lit(1)).as("dau"))
       val wau = days.join(e,
@@ -1051,8 +1044,7 @@ object EventOps {
         graft.streaming.StreamOps.timeToConvert(spark,
           graft.streaming.StreamOps.eventStream(spark, sfDir)),
         "stream_ttc")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(emitted)
+        .transform(graft.CacheTracker.persist)
       val nconv = emitted.count()
       val w = Window.orderBy("k")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)

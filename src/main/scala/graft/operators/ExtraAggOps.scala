@@ -417,8 +417,7 @@ object ExtraAggOps {
         sum(expr("CAST(floor(o_totalprice * 100) AS BIGINT)")).as("m_cents"))
         // consumed by the population count AND the three rank chains —
         // persist so the orders aggregation runs once
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(c)
+        .transform(graft.CacheTracker.persist)
       val n = c.count()
       require(n >= 5, s"RFM quintiles need >= 5 customers, got $n")
       def tile(rn: String): org.apache.spark.sql.Column = {

@@ -348,8 +348,7 @@ object GraphOps {
     // two orientation joins reuse the same blocks) — never inferred from
     // the 2|E| bound, which overshoots 4x on a dense graph.
     val deg = if (edgeCount <= BroadcastEdgeCap) {
-      val d = deg0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(d)
+      val d = deg0.transform(graft.CacheTracker.persist)
       if (d.count() <= BroadcastVertexCap) broadcast(d) else d
     } else deg0
     val withDeg = e0
@@ -410,7 +409,6 @@ object GraphOps {
     * early-exiting engine. Returns (node, core_degree) — each surviving
     * node with its degree inside the final core. */
   def kCore(ue: DataFrame, k: Int, maxRounds: Int): DataFrame = {
-    val mad = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // The edge cache is hash-partitioned by the aggregation key ONCE, so
     // every peel round's surviving-degree agg reuses the cache's
     // partitioning instead of re-shuffling the (filtered) edge list —
@@ -422,7 +420,7 @@ object GraphOps {
     val edges = ue.select(col("u").as("a"), col("v").as("b"))
       .unionByName(ue.select(col("v").as("a"), col("u").as("b")))
       .repartition(col("a"))
-      .persist(mad)
+      .transform(graft.CacheTracker.persist)
     edges.count()
     var surv = edges.select(col("a").as("node")).distinct().localCheckpoint()
     var prev = surv.count()
@@ -456,7 +454,6 @@ object GraphOps {
       .join(gated(surv.withColumnRenamed("node", "a"), prev), Seq("a"), "left_semi")
       .join(gated(surv.withColumnRenamed("node", "b"), prev), Seq("b"), "left_semi")
       .groupBy(col("a").as("node")).agg(count(lit(1)).as("core_degree"))
-    graft.CacheTracker.track(edges)
     graft.CacheTracker.trackCheckpointed(surv)
     out
   }
@@ -477,7 +474,7 @@ object GraphOps {
   def linkPredict(ue: DataFrame, scale: Long = 1000000L): DataFrame = {
     val e = ue.select(col("u").as("a"), col("v").as("b"))
       .unionByName(ue.select(col("v").as("a"), col("u").as("b")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.CacheTracker.persist)
     val deg = e.groupBy("a").agg(count(lit(1)).as("d"))
     // the hinge-side contribution rides each directed edge exactly once
     val ed = e.join(deg, "a")
@@ -486,7 +483,6 @@ object GraphOps {
       .join(e.as("e2"), col("e1.a") === col("e2.a") && col("e1.b") < col("e2.b"))
       .groupBy(col("e1.b").as("x"), col("e2.b").as("y"))
       .agg(count(lit(1)).as("cn"), sum(col("e1.c")).as("aa_ppm"))
-    graft.CacheTracker.track(e)
     cand.join(ue, cand("x") === ue("u") && cand("y") === ue("v"), "left_anti")
   }
 
@@ -511,7 +507,7 @@ object GraphOps {
       if (ue.storageLevel != org.apache.spark.storage.StorageLevel.NONE) ue.count()
       else Long.MaxValue
     val oriented = orientByDegree(ue, edgeCount = m)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.CacheTracker.persist)
     // EDGE-CENTRIC adjacency intersection (the r11 rewrite): for each
     // oriented edge (u, v), the triangles through it are exactly
     // N+(u) ∩ N+(v) — each triangle found once, at its single edge whose
@@ -556,7 +552,6 @@ object GraphOps {
       .select(array_sort(array(col("src"), col("dst"), col("w"))).as("t"))
       .select(col("t").getItem(0).as("a"), col("t").getItem(1).as("b"),
         col("t").getItem(2).as("c"))
-    graft.CacheTracker.track(oriented)
     tri
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamReader, Trigger}
 import org.apache.spark.sql.functions._
 
 import graft.GraftQuery
@@ -390,8 +391,7 @@ object InventoryOps {
       val base = inventory(spark, sfDir).filter(!col("is_folder"))
         .select(col("name"), col("owner"), col("length"), lit(1L).as("v"))
         .repartition(col("name"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(base)
+        .transform(graft.CacheTracker.persist)
       val upd = base.filter(col("length") % 10 < 3)
         .select(col("name"), concat(lit("migrated-"), col("owner")).as("owner"),
           (col("length") + 4096).as("length"), lit(2L).as("v"))
@@ -683,19 +683,10 @@ object InventoryOps {
         .select("l_partkey", "l_orderkey", "l_linenumber")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
       val root = Files.createTempDirectory("graft_inv_stream").toString
-      val ckpt = Files.createTempDirectory("graft_inv_stream_ckpt").toString
-      val outBase = Files.createTempDirectory("graft_inv_stream_out").toString
-      // folder mtimes pinned to 0 after every wave: file creation bumps
-      // parent-dir mtimes to "now", which would drag the watermark past
-      // every later wave's file mtimes
-      def resetDirs(): Unit = {
-        val it = Files.walk(Paths.get(root)).iterator()
-        while (it.hasNext) {
-          val p = it.next()
-          if (Files.isDirectory(p)) Files.setLastModifiedTime(p, FileTime.fromMillis(0L))
-        }
-      }
-      def writeWave(w: Int): Unit = {
+      // project away the ownership columns: pruning reaches the walk,
+      // which otherwise pays a per-entry permission probe on local FS
+      twoWaveSync(spark.readStream.format("graft-inventory").option("root", root), root,
+          Seq("parent_directory", "is_folder", "length"), identity) { w =>
         rows.filter { case (_, ok, _) => (if (ok % 1000 < 500) 1 else 2) == w }
           .foreach { case (pk, ok, ln) =>
             val dir = Paths.get(s"$root/data/part=$pk")
@@ -704,31 +695,7 @@ object InventoryOps {
             Files.write(f, Array.fill(ln)(0.toByte))
             Files.setLastModifiedTime(f, FileTime.fromMillis((ok % 1000) * 1000L))
           }
-        resetDirs()
       }
-      def drain(run: Int): DataFrame = {
-        val out = s"$outBase/run$run"
-        val q = spark.readStream.format("graft-inventory").option("root", root).load()
-          // project away the ownership columns: pruning reaches the walk,
-          // which otherwise pays a per-entry permission probe on local FS
-          .select("parent_directory", "is_folder", "length")
-          .filter(!col("is_folder"))
-          .writeStream.outputMode("append")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            batch.write.mode("append").parquet(out)
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        if (Files.exists(Paths.get(out))) spark.read.parquet(out)
-        else spark.read.format("graft-inventory").option("root", root).load()
-          .select("parent_directory", "is_folder", "length").limit(0)
-      }
-      writeWave(1)
-      val b1 = drain(1)
-      writeWave(2)
-      val b2 = drain(2)
-      b1.withColumn("wave", lit(1L)).unionByName(b2.withColumn("wave", lit(2L)))
         .groupBy(col("parent_directory").as("dir"), col("wave"))
         .agg(count(lit(1)).as("n_files"), sum("length").as("bytes"))
         .orderBy("dir", "wave")
@@ -777,26 +744,6 @@ object InventoryOps {
         .distinct()
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
       val root = Files.createTempDirectory("graft_inv_remap").toString
-      val ckpt = Files.createTempDirectory("graft_inv_remap_ckpt").toString
-      val outBase = Files.createTempDirectory("graft_inv_remap_out").toString
-      def resetDirs(): Unit = {
-        val it = Files.walk(Paths.get(root)).iterator()
-        while (it.hasNext) {
-          val p = it.next()
-          if (Files.isDirectory(p)) Files.setLastModifiedTime(p, FileTime.fromMillis(0L))
-        }
-      }
-      def writeWave(w: Int): Unit = {
-        rows.filter { case (_, ok, _, _) => (if (ok % 1000 < 500) 1 else 2) == w }
-          .foreach { case (pk, ok, ln, sk) =>
-            val dir = Paths.get(s"$root/data/part=$pk")
-            Files.createDirectories(dir)
-            val f = dir.resolve(s"f-$ok-$ln-$sk.dat")
-            Files.write(f, Array.fill(ln)(0.toByte))
-            Files.setLastModifiedTime(f, FileTime.fromMillis((ok % 1000) * 1000L))
-          }
-        resetDirs()
-      }
       // op-19 exclusions + op-23 remap, applied PER BATCH (the migration
       // loop's shape — each delta batch is filtered and remapped before
       // it ships); the identity map broadcasts, the exclusion is a
@@ -805,33 +752,23 @@ object InventoryOps {
       val keep = exclusions.map(p => !col("name").rlike(p)).reduce(_ && _)
       val users = identityMap(spark, sfDir).filter(col("itype") === "user")
         .select(col("source"), col("target"))
-      def drain(run: Int): DataFrame = {
-        val out = s"$outBase/run$run"
-        val q = spark.readStream.format("graft-inventory").option("root", root).load()
-          .select("name", "parent_directory", "is_folder", "length")
-          .filter(!col("is_folder"))
-          .writeStream.outputMode("append")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            batch.filter(keep)
-              .withColumn("owner",
-                concat(lit("user"), regexp_extract(col("name"), "-([0-9]+)\\.dat$", 1)))
-              .join(broadcast(users), col("owner") === col("source"), "left")
-              .select(col("parent_directory"), col("length"),
-                coalesce(col("target"), col("owner")).as("owner_mapped"))
-              .write.mode("append").parquet(out)
+      def remapped(batch: DataFrame): DataFrame = batch.filter(keep)
+        .withColumn("owner",
+          concat(lit("user"), regexp_extract(col("name"), "-([0-9]+)\\.dat$", 1)))
+        .join(broadcast(users), col("owner") === col("source"), "left")
+        .select(col("parent_directory"), col("length"),
+          coalesce(col("target"), col("owner")).as("owner_mapped"))
+      twoWaveSync(spark.readStream.format("graft-inventory").option("root", root), root,
+          Seq("name", "parent_directory", "is_folder", "length"), remapped) { w =>
+        rows.filter { case (_, ok, _, _) => (if (ok % 1000 < 500) 1 else 2) == w }
+          .foreach { case (pk, ok, ln, sk) =>
+            val dir = Paths.get(s"$root/data/part=$pk")
+            Files.createDirectories(dir)
+            val f = dir.resolve(s"f-$ok-$ln-$sk.dat")
+            Files.write(f, Array.fill(ln)(0.toByte))
+            Files.setLastModifiedTime(f, FileTime.fromMillis((ok % 1000) * 1000L))
           }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        if (Files.exists(Paths.get(out))) spark.read.parquet(out)
-        else spark.range(0).select(lit("").as("parent_directory"),
-          lit(0L).as("length"), lit("").as("owner_mapped")).limit(0)
       }
-      writeWave(1)
-      val b1 = drain(1)
-      writeWave(2)
-      val b2 = drain(2)
-      b1.withColumn("wave", lit(1L)).unionByName(b2.withColumn("wave", lit(2L)))
         .groupBy(col("parent_directory").as("dir"), col("wave"), col("owner_mapped"))
         .agg(count(lit(1)).as("n_files"), sum("length").as("bytes"))
         .orderBy("dir", "wave", "owner_mapped")
@@ -889,12 +826,12 @@ object InventoryOps {
         .select("parent_directory", "is_folder", "length")
         .filter(!col("is_folder"))
         .writeStream.outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+        .foreachBatch { (batch: Dataset[Row], id: Long) =>
           batch.withColumn("batch", lit(id))
             .write.mode("append").parquet(out)
         }
         .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       spark.read.parquet(out)
         .groupBy("batch")
@@ -1018,17 +955,6 @@ object InventoryOps {
         .filter(col("l_partkey") % 200 === 0)
         .select("l_partkey", "l_orderkey", "l_linenumber", "l_suppkey").distinct()
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
-      // V2 writes and ownership-record updates bump directory mtimes;
-      // pin every dir to 0 after each wave so the watermark tracks files
-      def resetDirs(): Unit = {
-        val it = java.nio.file.Files.walk(java.nio.file.Paths.get(backing)).iterator()
-        while (it.hasNext) {
-          val p = it.next()
-          if (java.nio.file.Files.isDirectory(p))
-            java.nio.file.Files.setLastModifiedTime(p,
-              java.nio.file.attribute.FileTime.fromMillis(0L))
-        }
-      }
       def writeWave(w: Int): Unit = {
         val rows = keys.filter { case (_, ok, _, _) => (if (ok % 1000 < 500) 1 else 2) == w }
         val df = rows.toSeq.toDF("pk", "ok", "ln", "sk").select(
@@ -1045,42 +971,19 @@ object InventoryOps {
           fs.setTimes(new Path(s"${rootUri}data/part=$pk/f-$ok-$ln-$sk.dat"),
             (ok % 1000) * 1000L, -1L)
         }
-        resetDirs()
       }
       val users = identityMap(spark, sfDir).filter(col("itype") === "user")
         .select(col("source"), col("target"))
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_own_stream_ckpt").toString
-      val outBase = java.nio.file.Files.createTempDirectory("graft_own_stream_out").toString
-      def drain(run: Int): DataFrame = {
-        val out = s"$outBase/run$run"
-        val reader = hc.foldLeft(
-          spark.readStream.format("graft-inventory").option("root", rootUri)) {
-          case (r, (k, v)) => r.option("hadoop." + k, v)
-        }
-        val q = reader.load()
-          .select("parent_directory", "is_folder", "length", "owner")
-          .filter(!col("is_folder"))
-          .writeStream.outputMode("append")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            batch
-              .join(broadcast(users), col("owner") === col("source"), "left")
-              .select(col("parent_directory"), col("length"),
-                coalesce(col("target"), col("owner")).as("owner_mapped"))
-              .write.mode("append").parquet(out)
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        if (java.nio.file.Files.exists(java.nio.file.Paths.get(out)))
-          spark.read.parquet(out)
-        else spark.range(0).select(lit("").as("parent_directory"),
-          lit(0L).as("length"), lit("").as("owner_mapped")).limit(0)
+      val reader = hc.foldLeft(
+        spark.readStream.format("graft-inventory").option("root", rootUri)) {
+        case (r, (k, v)) => r.option("hadoop." + k, v)
       }
-      writeWave(1)
-      val b1 = drain(1)
-      writeWave(2)
-      val b2 = drain(2)
-      b1.withColumn("wave", lit(1L)).unionByName(b2.withColumn("wave", lit(2L)))
+      // V2 writes and ownership-record updates bump directory mtimes too
+      twoWaveSync(reader, backing,
+          Seq("parent_directory", "is_folder", "length", "owner"),
+          _.join(broadcast(users), col("owner") === col("source"), "left")
+            .select(col("parent_directory"), col("length"),
+              coalesce(col("target"), col("owner")).as("owner_mapped")))(writeWave)
         .groupBy(col("parent_directory").as("dir"), col("wave"), col("owner_mapped"))
         .agg(count(lit(1)).as("n_files"), sum("length").as("bytes"))
         .orderBy("dir", "wave", "owner_mapped")
@@ -1106,6 +1009,45 @@ object InventoryOps {
           |GROUP BY grp ORDER BY grp""".stripMargin)
     }
   )
+
+  /** The two-wave continuous sync the stream_*_sync rows replay, per wave
+    * w in 1, 2: `writeWave(w)` lands the wave's files under the local
+    * directory `tree`; every folder mtime there is pinned to 0 (creating a
+    * file bumps its parent's mtime to "now", which would drag the watermark
+    * past every later wave's file mtimes); then one Trigger.AvailableNow
+    * run of `reader`, projected to `cols` and files only, appends each
+    * micro-batch through `perBatch` as parquet. The runs share one
+    * checkpoint, so the second ships only the second wave's delta.
+    * Returns both runs' rows tagged with their `wave`. */
+  private def twoWaveSync(reader: DataStreamReader, tree: String, cols: Seq[String],
+      perBatch: DataFrame => DataFrame)(writeWave: Int => Unit): DataFrame = {
+    import java.nio.file.{Files, Paths}
+    val ckpt = Files.createTempDirectory("graft_inv_sync_ckpt").toString
+    val outBase = Files.createTempDirectory("graft_inv_sync_out").toString
+    (1 to 2).map { w =>
+      writeWave(w)
+      val it = Files.walk(Paths.get(tree)).iterator()
+      while (it.hasNext) {
+        val p = it.next()
+        if (Files.isDirectory(p))
+          Files.setLastModifiedTime(p, java.nio.file.attribute.FileTime.fromMillis(0L))
+      }
+      val out = s"$outBase/run$w"
+      val stream = reader.load().select(cols.map(col): _*).filter(!col("is_folder"))
+      stream.writeStream.outputMode("append")
+        .foreachBatch { (batch: Dataset[Row], _: Long) =>
+          perBatch(batch).write.mode("append").parquet(out)
+        }
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
+      val rows =
+        if (Files.exists(Paths.get(out))) stream.sparkSession.read.parquet(out)
+        else stream.sparkSession.createDataFrame(java.util.Collections.emptyList[Row](),
+          perBatch(stream).schema)
+      rows.withColumn("wave", lit(w.toLong))
+    }.reduce(_ unionByName _)
+  }
 
   /** memoized per (session, sfDir): a graftfs:// tree whose files carry
     * deterministic ownership, materialized through the V2 write path.

@@ -183,8 +183,7 @@ object LayoutOps {
          |        LEFT JOIN ex ON ex.i = pr.i
          |ORDER BY probe""".stripMargin) { (spark, sfDir) =>
       val li = lineitem(spark, sfDir).select(col("l_partkey"), col("l_orderkey"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(li)
+        .transform(graft.CacheTracker.persist)
       val nRows = li.count()
       val mx = li.agg(max("l_partkey").as("mp"), max("l_orderkey").as("mo"))
       val z = li.join(broadcast(mx))
@@ -205,8 +204,7 @@ object LayoutOps {
       val pr = spark.range(1, 9).toDF("i").join(broadcast(pm))
         .select(col("i"), expr("(mpk * i) DIV 9").as("lo"),
           expr("(mpk * i) DIV 9 + mpk DIV 32").as("hi"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(pr)
+        .transform(graft.CacheTracker.persist)
       val zh = pr.join(zb, zb("pk_max") >= pr("lo") && zb("pk_min") <= pr("hi"))
         .groupBy("i").agg(count(lit(1)).as("z_blocks"), sum("n").as("z_rows"))
       val lh = pr.join(lb, lb("pk_max") >= pr("lo") && lb("pk_min") <= pr("hi"))

@@ -85,8 +85,7 @@ object MultimodalOps {
   private def phashPairs(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): org.apache.spark.sql.DataFrame = {
     val ph = phashDf(spark, sfDir).select("doc_id", "h_hi", "h_lo")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.CacheTracker.track(ph)
+      .transform(graft.CacheTracker.persist)
     val bands = ph.select(col("doc_id"), col("h_hi"), col("h_lo"),
         explode(sequence(lit(0), lit(3))).as("k"))
       .withColumn("bandval", expr(

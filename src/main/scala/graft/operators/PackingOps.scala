@@ -248,8 +248,7 @@ object PackingOps {
         .select(col("path"), col("size"),
           when(col("size") > Capacity, 0L).otherwise(col("size")).as("psz"),
           when(col("size") > Capacity, 1L).otherwise(0L).as("ovr"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(pk)
+        .transform(graft.CacheTracker.persist)
       def bins(order: Seq[org.apache.spark.sql.Column]) = {
         val w = Window.orderBy(order: _*)
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)

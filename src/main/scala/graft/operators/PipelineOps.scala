@@ -108,8 +108,7 @@ object PipelineOps {
       val surv = TextOps.cleanFlags(spark, sfDir)
         .filter(col("clean"))
         .select("doc_id", "text")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(surv)
+        .transform(graft.CacheTracker.persist)
 
       // stage 3: near-dup keep-best on the SURVIVORS — pairs come from the
       // family's cached df-filtered shingles, restricted to survivors by
@@ -126,8 +125,7 @@ object PipelineOps {
       val kept = mem.groupBy("cluster")
         .agg(max_by(col("doc_id"),
           length(col("text")).cast("long") * 1000000000L - col("doc_id")).as("doc_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(kept)
+        .transform(graft.CacheTracker.persist)
 
       // stage 4: decontamination — eval grams (tiny by construction)
       // broadcast; kept docs re-attach text via the cached survivor frame
@@ -146,8 +144,7 @@ object PipelineOps {
         .withColumn("split", when(col("b") < 90, "train")
           .when(col("b") < 95, "val").otherwise("test"))
         .select("doc_id", "split")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(spl)
+        .transform(graft.CacheTracker.persist)
 
       // stage 8: pack the train slice into sequences (distributed prefix
       // sum, Prefix.scan; %019d key keeps string range order == numeric order)

@@ -40,7 +40,10 @@ object Prefix {
     val ranged = input.repartitionByRange(nParts, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
       .withColumn("__pid", spark_partition_id())
-      .persist() // pin partition assignment and order across the two passes
+      // pin partition assignment and order across the two passes; the
+      // cache backs the returned (lazy) frame, so CacheTracker.releaseAll
+      // frees it after the query's action
+      .transform(graft.CacheTracker.persist)
     val n = input.columns.length // row layout below: input columns, __pid, __v
     val src = ranged.withColumn("__v", value.cast(LongType))
 
@@ -55,11 +58,8 @@ object Prefix {
       }
       if (has) Iterator((pid, acc)) else Iterator.empty
     }.collect().toMap
-    // the folds job materialized `ranged`; the input cache is done. `ranged`
-    // backs the returned (lazy) frame, so its release is deferred to
-    // graft.CacheTracker.releaseAll() after the query's action.
+    // the folds job materialized `ranged`; the input cache is done
     if (ownInput) input.unpersist(blocking = false)
-    graft.CacheTracker.track(ranged)
     // seeds(p) = fold over every partition before p (None: no value yet)
     val seeds = (0 until nParts).scanLeft(Option.empty[Long]) { (acc, p) =>
       folds.get(p).fold(acc)(v => Some(acc.fold(v)(agg(_, v))))

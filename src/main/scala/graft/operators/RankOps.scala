@@ -459,8 +459,7 @@ object RankOps {
         .select("l_orderkey", "l_partkey")
         .repartition(col("l_orderkey"))
         .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(d)
+        .transform(graft.CacheTracker.persist)
       val n = d.groupBy("l_partkey").agg(count(lit(1)).as("n"))
       // The wedge stream is re-keyed by u BEFORE the pair aggregation so
       // ONE exchange serves the aggregation (grouping (u, v) ⊇ u), the
@@ -560,12 +559,10 @@ object RankOps {
         .select(col("src"), col("dst"),
           round(lit(1000) * log2(col("w").cast("double") / col("n"))).cast("long")
             .as("c"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(wt)
+        .transform(graft.CacheTracker.persist)
       val nodes = wt.select(col("src").as("node"))
         .unionByName(wt.select(col("dst").as("node"))).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(nodes)
+        .transform(graft.CacheTracker.persist)
       var dist = nodes.select(col("node"),
           when(col("node") === PathSeed, 0L).otherwise(PathInf).as("dist"))
         .localCheckpoint()

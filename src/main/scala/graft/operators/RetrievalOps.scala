@@ -71,8 +71,7 @@ object RetrievalOps {
       // this, the explode runs once per derived statistic and dominates
       // the decade ratio
       val tf = tok.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(tf)
+        .transform(graft.CacheTracker.persist)
       val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
       val dfreq = tf.groupBy("tok").agg(count(lit(1)).as("df"))
       // two bounded driver scalars (corpus size, token total) — the same
@@ -119,8 +118,7 @@ object RetrievalOps {
       val tok = Tables.documents(spark, sfDir).select(col("doc_id"),
         explode(expr("regexp_extract_all(text, '[a-z0-9]+', 0)")).as("tok"))
       val tf = tok.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(tf)
+        .transform(graft.CacheTracker.persist)
       val q = tf.groupBy("tok").agg(count(lit(1)).as("df"))
         .orderBy(col("df").asc, col("tok")).limit(AndTerms).select("tok")
       tf.join(broadcast(q), Seq("tok"))
@@ -160,8 +158,7 @@ object RetrievalOps {
       // tf backs both the term selection and the postings scan — persist so
       // the tokenize+explode pass runs once
       val tf = tok.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(tf)
+        .transform(graft.CacheTracker.persist)
       val sel = tf.groupBy("tok").agg(count(lit(1)).as("df"))
         .orderBy(col("df").desc, col("tok")).limit(IndexTerms)
       val w = org.apache.spark.sql.expressions.Window
@@ -212,8 +209,7 @@ object RetrievalOps {
         .withColumn("t2", lead("t1", 1).over(w))
         .filter(col("t2").isNotNull)
         .select("doc_id", "t1", "t2")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(bg)
+        .transform(graft.CacheTracker.persist)
       val q = bg.groupBy("t1", "t2").agg(count(lit(1)).as("c"))
         .orderBy(col("c").desc, col("t1"), col("t2")).limit(1)
         .select("t1", "t2")

@@ -238,8 +238,7 @@ object SimilarityOps {
     // vector, so the cache is id + ≤2 longs per vector at any scale.
     val coded = e.select(col("vec_id"), array(wordCols: _*).as("ws"))
       .repartition(spark.sessionState.conf.numShufflePartitions)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.CacheTracker.track(coded)
+      .transform(graft.CacheTracker.persist)
     val bands = coded
       .select(col("vec_id"), col("ws"),
         explode(sequence(lit(0), lit(plan.tables - 1))).as("g"))
@@ -387,8 +386,7 @@ object SimilarityOps {
       .select(col("vec_id"),
         expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT))").as("xq"))
       .withColumn("n2", expr("aggregate(xq, 0L, (a, x) -> a + x * x)"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.CacheTracker.track(q)
+      .transform(graft.CacheTracker.persist)
 
     def components(vid: Long): Array[Long] =
       q.filter(col("vec_id") === vid).select("xq")
@@ -550,8 +548,7 @@ object SimilarityOps {
     // representative join — GraphOps' eager edge materialization makes
     // this cache hot before the loop starts
     val withVec = assign.join(v, Seq("vec_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.CacheTracker.track(withVec)
+      .transform(graft.CacheTracker.persist)
     val left = withVec.select(col("cluster"), col("vec_id").as("a"),
       col("ve").as("ea"), col("nv").as("na"))
     val right = withVec.select(col("cluster"), col("vec_id").as("b"),
@@ -908,8 +905,7 @@ object SimilarityOps {
       val q = embeddings(spark, sfDir)
         .select(col("vec_id"),
           expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT))").as("xq"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(q)
+        .transform(graft.CacheTracker.persist)
       val k = math.max(2,
         math.ceil(q.count().toDouble / ScaledAnnOccupancy).toInt)
       // orderBy+limit plans as TakeOrderedAndProject — a per-partition

@@ -122,8 +122,7 @@ object SketchOps {
          |ORDER BY est_n DESC, k.user_id LIMIT 20""".stripMargin,
       bench = true) { (spark, sfDir) =>
       val b = bucketed(Tables.events(spark, sfDir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(b)
+        .transform(graft.CacheTracker.persist)
       val cells = (1 to D).map(i =>
         b.groupBy(col(s"b$i").as("bk")).agg(count(lit(1)).as(s"n$i")))
       val keyAggs = (1 to D).map(i => min(col(s"b$i")).as(s"b$i")) :+
@@ -173,8 +172,7 @@ object SketchOps {
           (Seq(col("user_id"),
             expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000").as("day")) ++
             (1 to D).map(i => (PortableHash.minhashPerm(h, i) % W).as(s"b$i"))): _*)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(b)
+        .transform(graft.CacheTracker.persist)
       val merged = (1 to D).map(i =>
         b.groupBy(col("day"), col(s"b$i").as("bk")).agg(count(lit(1)).as("dn"))
           .groupBy("bk").agg(sum("dn").as(s"n$i")))
@@ -285,8 +283,7 @@ object SketchOps {
       // and is bounded (types × days × 64 rows) — persist it so the merge
       // and the n_days audit don't each rescan the events
       val daily = dailyHllRegisters(wr)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(daily)
+        .transform(graft.CacheTracker.persist)
       val merged = daily.groupBy("event_type", "bucket").agg(max("m").as("m"))
       val nd = daily.groupBy("event_type")
         .agg(count_distinct(col("day")).cast("long").as("n_days"))

@@ -81,8 +81,7 @@ object StatsOps {
       val q = Tables.embeddings(spark, sfDir)
         .select(col("vec_id"),
           expr(s"transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * $QScale) AS BIGINT))").as("xq"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(q)
+        .transform(graft.CacheTracker.persist)
       // one scan: n + the 64 component sums
       val mRow = q.agg(count(lit(1)).as("n"),
         (0 until Dim).map(i => sum(expr(s"element_at(xq, ${i + 1})")).as(s"s$i")): _*)
@@ -209,8 +208,7 @@ object StatsOps {
         .select(col("l_orderkey"), col("l_partkey"))
         .repartition(col("l_orderkey"))
         .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(bask)
+        .transform(graft.CacheTracker.persist)
       val nb = bask.agg(countDistinct("l_orderkey").as("n"))
       val item = bask.groupBy(col("l_partkey").as("it")).agg(count(lit(1)).as("c"))
       val pr = bask.as("b1").join(bask.as("b2"),
@@ -321,8 +319,7 @@ object StatsOps {
           expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000").as("day"),
           expr("CAST(floor(value * 100) AS BIGINT)").as("vc"))
         .groupBy("event_type", "day").agg(sum("vc").as("y"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(d)
+        .transform(graft.CacheTracker.persist)
       val a = d.select(col("event_type").as("ta"), col("day"), col("y").as("x"))
       val b = d.select(col("event_type").as("tb"), col("day"), col("y").as("y"))
       a.join(b, Seq("day")).filter(col("ta") < col("tb"))
@@ -569,8 +566,7 @@ object StatsOps {
       val c = Tables.lineitem(spark, sfDir)
         .select(floor(col("l_extendedprice") * 100).cast("long").as("cents"),
           col("l_orderkey"), col("l_linenumber"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(c)
+        .transform(graft.CacheTracker.persist)
       val n = c.count()
       val ranked = Prefix.scan(c, "rn",
         Seq(col("cents").asc, col("l_orderkey").asc, col("l_linenumber").asc), lit(1L), Prefix.Sum)

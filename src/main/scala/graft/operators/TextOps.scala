@@ -613,8 +613,7 @@ object TextOps {
         // consumed three times (two join sides + the token total below):
         // persist the bounded vocab frame — and derive the corpus token
         // count FROM it (Σc) instead of a second pass over the corpus
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(uni)
+        .transform(graft.CacheTracker.persist)
       val nt = uni.agg(sum("c").as("n"))
       val bc = t.select(explode(expr(
           "CASE WHEN size(toks) >= 2 THEN " +
@@ -667,8 +666,7 @@ object TextOps {
         .distinct()
         // consumed twice (first-seen agg + join probe): persist the
         // deduped trigram frame so the tokenize+explode+distinct runs once
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(tri)
+        .transform(graft.CacheTracker.persist)
       val first = tri.groupBy("g").agg(min("doc_id").as("first_doc"))
       tri.join(first, Seq("g"))
         .groupBy("doc_id")
@@ -758,8 +756,7 @@ object TextOps {
           "zip_with(slice(toks, 1, size(toks) - 1), slice(toks, 2, size(toks) - 1), " +
             "(a, b) -> struct(a AS w1, b AS w2))")).as("bg"))
         .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(bi)
+        .transform(graft.CacheTracker.persist)
       val cb = bi.groupBy("w1", "w2").agg(count(lit(1)).as("cb"))
       val cu = cb.groupBy("w1").agg(sum("cb").as("cu"))
       val v = cb.select(col("w1")).unionByName(cb.select(col("w2").as("w1")))
@@ -926,8 +923,7 @@ object TextOps {
         |FROM g ORDER BY decile""".stripMargin) { (spark, sfDir) =>
       import org.apache.spark.sql.expressions.Window
       val base = docs(spark, sfDir).select("doc_id", "n_chars")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(base)
+        .transform(graft.CacheTracker.persist)
       val (n, total) = {
         val r = base.agg(count(lit(1)), sum("n_chars")).head()
         (r.getLong(0), r.getLong(1))
@@ -978,8 +974,7 @@ object TextOps {
       val tf = docs(spark, sfDir)
         .select(explode(expr("regexp_extract_all(text, '[a-z0-9]+', 0)")).as("tok"))
         .groupBy("tok").agg(count(lit(1)).as("cnt"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(tf)
+        .transform(graft.CacheTracker.persist)
       val (total, nTypes) = {
         val r = tf.agg(sum("cnt"), count(lit(1))).head()
         (r.getLong(0), r.getLong(1))
@@ -1080,8 +1075,7 @@ object TextOps {
         .select(col("doc_id"),
           explode(expr("regexp_extract_all(text, '[a-z0-9]+', 0)")).as("tok"))
         .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(tf)
+        .transform(graft.CacheTracker.persist)
       val n = tf.select("doc_id").distinct().count()
       // df cap: tokens in more than half the corpus carry ~no idf signal
       // and quadratically dominate the join — same role as dedup's MaxDf
@@ -1090,8 +1084,7 @@ object TextOps {
         .select(col("doc_id"), col("tok"),
           (col("tf") * round(lit(1000) * log2(lit(n.toDouble) / col("df"))).cast("long"))
             .as("wt"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(w)
+        .transform(graft.CacheTracker.persist)
       val nrm = w.groupBy("doc_id").agg(sum(col("wt") * col("wt")).as("n2"))
       val dots = w.as("a").join(w.as("b"),
           col("a.tok") === col("b.tok") && col("a.doc_id") < col("b.doc_id"))

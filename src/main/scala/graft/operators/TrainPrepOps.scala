@@ -532,22 +532,21 @@ object TrainPrepOps {
       val bg = docs(spark, sfDir)
         .withColumn("toks", expr("regexp_extract_all(text, '[a-z0-9]+', 0)"))
         .select(col("doc_id"), explode(expr(gramsExpr(2))).as("bg"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(bg)
+        .transform(graft.CacheTracker.persist)
       val tc = bg.filter(isEvalDoc).groupBy("bg").agg(count(lit(1)).as("ct"))
       val rc = bg.filter(!isEvalDoc).groupBy("bg").agg(count(lit(1)).as("cr"))
       val aff = tc.join(rc, Seq("bg"))
         .select(col("bg"), expr("(ct * 1000000) DIV cr").as("a"))
-      // persisted only to pin the frame between the k-count action and
-      // Prefix.scan's materialization (the scan itself unpersists its
-      // input after its fold pass, so no tracker entry here)
+      // cached so the k-count action and Prefix.scan read one
+      // materialization; the scan leaves a caller's cache alone, so this
+      // one is released with the query's other helper caches
       val scored = bg.filter(!isEvalDoc)
         .join(broadcast(aff), Seq("bg"), "left")
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_bigrams"),
           sum(coalesce(col("a"), lit(0L))).as("affinity"))
         .withColumn("avgd", col("affinity").cast("double") / col("n_bigrams"))
-        .persist()
+        .transform(graft.CacheTracker.persist)
       val k = math.ceil(0.1 * scored.count()).toLong
       Prefix.scan(scored, "rnk", Seq(col("avgd").desc, col("doc_id")), lit(1L), Prefix.Sum)
         .select(col("doc_id"), col("n_bigrams"), col("affinity"),
@@ -636,8 +635,7 @@ object TrainPrepOps {
           expr("CASE WHEN size(toks) = 0 THEN 0L ELSE " +
             "(1000000 * CAST(size(array_distinct(toks)) AS BIGINT)) " +
             "DIV CAST(size(toks) AS BIGINT) END").as("score_ppm"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheTracker.track(f)
+        .transform(graft.CacheTracker.persist)
       val budget = f.agg(sum("nt")).head().getLong(0) / 2
       // one distributed prefix sum of tokens in quality order (ties by
       // doc_id): the running total IS the budget test, no rank needed

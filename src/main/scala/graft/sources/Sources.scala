@@ -47,11 +47,11 @@ object Sources {
     * malformed records into a quarantine frame instead of failing the job
     * — the per-item error-tolerance posture (op 34) applied at the
     * ingestion edge, where a 100 TB feed WILL contain torn lines. Returns
-    * (parsed rows, quarantined raw lines). The parsed frame is cached and
-    * CacheTracker-tracked: Spark refuses a filter that references only the
-    * internal corrupt-record column on a lazy frame (it would have to
-    * re-parse with a different required schema), so materializing once is
-    * both the correctness requirement and the cheap plan. */
+    * (parsed rows, quarantined raw lines). The parsed frame is cached per
+    * query (CacheTracker.persist): Spark refuses a filter that references
+    * only the internal corrupt-record column on a lazy frame (it would have
+    * to re-parse with a different required schema), so materializing once
+    * is both the correctness requirement and the cheap plan. */
   def readJsonQuarantine(spark: SparkSession, path: String,
       schema: StructType): (DataFrame, DataFrame) = {
     val corrupt = "_corrupt_record"
@@ -60,8 +60,7 @@ object Sources {
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", corrupt)
       .json(path)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.CacheTracker.track(raw)
+      .transform(graft.CacheTracker.persist)
     val good = raw.filter(col(corrupt).isNull).drop(corrupt)
     val quarantined = raw.filter(col(corrupt).isNotNull)
       .select(col(corrupt).as("raw_line"))
@@ -91,8 +90,7 @@ object Sources {
       .option("escape", "\"")
       .option("enforceSchema", "true")
       .csv(path)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.CacheTracker.track(raw)
+      .transform(graft.CacheTracker.persist)
     val good = raw.filter(col(corrupt).isNull).drop(corrupt)
     val quarantined = raw.filter(col(corrupt).isNotNull)
       .select(col(corrupt).as("raw_line"))

@@ -409,7 +409,6 @@ object StreamOps {
     q.awaitTermination()
   }
 
-  /** run any of the above to completion against bounded input (test hook) */
   /** Streaming count-min sketch maintenance — the incremental twin of the
     * batch `events_count_min` cells. Each arriving event increments its D
     * bucket counters; the running aggregation state IS the sketch: D×W

@@ -91,6 +91,16 @@ class PrefixSpec extends AnyFunSuite with CacheDrained {
       val got = Prefix.scan(df, "out", Seq(col("v")), col("v"), Prefix.Sum)
       assert(got.count() == 1000)
       assert(df.storageLevel != StorageLevel.NONE, "scan dropped the caller's cache")
+      // CacheTracker.persist leaves an existing cache to its owner...
+      assert(CacheTracker.persist(df) eq df)
+      // ...and still caches and releases a frame nobody had cached
+      // (a different range: renaming the column alone leaves the plan
+      // equal to `df`'s, which the cache lookup treats as cached)
+      val fresh = CacheTracker.persist(TestSpark.spark.range(0, 2000).toDF("v"))
+      assert(fresh.storageLevel == StorageLevel.MEMORY_AND_DISK)
+      CacheTracker.releaseAll(blocking = true)
+      assert(df.storageLevel != StorageLevel.NONE, "releaseAll dropped the caller's cache")
+      assert(fresh.storageLevel == StorageLevel.NONE, "releaseAll kept a tracked cache")
     } finally df.unpersist(blocking = true)
   }
 }

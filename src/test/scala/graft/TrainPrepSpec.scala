@@ -214,9 +214,20 @@ class TrainPrepSpec extends AnyFunSuite with CacheDrained {
   }
 
   test("train_dsir_select takes exactly the top-10% by mean affinity, never eval docs") {
-    val rows = SparkEntry.queries("train_dsir_select")(TestSpark.spark, TestSpark.Sf)
+    val spark = TestSpark.spark
+    val sc = spark.sparkContext
+    // an earlier run in the shared session may have cached equal plans,
+    // which this run would then not cache itself; start from none so
+    // every cache this run makes shows up below
+    spark.catalog.clearCache()
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val rows = SparkEntry.queries("train_dsir_select")(spark, TestSpark.Sf)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(4), r.getInt(5)))
+    CacheTracker.releaseAll(blocking = true)
+    val leaked = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(leaked.isEmpty,
+      s"cached past releaseAll: ${leaked.values.map(_.toString.takeRight(80)).mkString("; ")}")
     assert(rows.nonEmpty)
     assert(rows.forall(_._1 % 50 != 7), "eval docs must not be scored")
     // rnk is a permutation of 1..n and selected = rnk <= ceil(0.1 n)
