@@ -7,6 +7,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * op that is deliberately not a registered query — data-dependent shapes
   * the SQL oracle cannot express), and show plan + rows.
   * Usage: runMain graft.RunOne <name> [sfDir] [explain] [jobs] [show] [conf:k=v ...]
+  * `explain` prints the formatted plan, then each whole-stage-codegen
+  * stage's largest generated method, marking any over HotSpot's JIT limit
+  * (the static plan's stages: see [[codegenMethodSizes]]).
   * `jobs` prints a per-Spark-job wall/desc line after each iteration —
   * the job-count/orchestration attribution view (r12: most bench queries
   * at sf0.1 are bound by per-job fixed cost, not compute).
@@ -16,6 +19,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the JVM only.
   */
 object RunOne {
+  /** HotSpot's limit (`-XX:+DontCompileHugeMethods`, on by default): a
+    * method with more bytecode than this is never JIT-compiled */
+  val HugeMethodLimit = 8000
+
+  /** (first line of the stage's plan, largest generated method in bytes)
+    * per whole-stage-codegen stage of the frame `build` returns, planned
+    * without adaptive execution: AQE collapses codegen stages only as it
+    * runs them, and drops from its final plan any stage that an empty
+    * input cut off, so only the static plan shows every stage up front. */
+  def codegenMethodSizes(spark: SparkSession)(build: => DataFrame): Seq[(String, Int)] = {
+    val aqe = "spark.sql.adaptive.enabled"
+    val was = spark.conf.get(aqe)
+    spark.conf.set(aqe, "false")
+    try build.queryExecution.debug.codegenToSeq().map { case (subtree, _, stats) =>
+      (subtree.linesIterator.next(), stats.maxMethodCodeSize)
+    } finally spark.conf.set(aqe, was)
+  }
+
   private val library: Map[String, (SparkSession, String) => DataFrame] = Map(
     "semdedup_scaled" -> ((spark, sfDir) =>
       graft.operators.SimilarityOps.semDedupScaled(spark, sfDir)),
@@ -71,6 +92,11 @@ object RunOne {
     }
     if (args.contains("explain")) {
       run(spark, sfDir).explain("formatted")
+      CacheTracker.releaseAll(blocking = true)
+      codegenMethodSizes(spark)(run(spark, sfDir)).foreach { case (stage, bytes) =>
+        val mark = if (bytes > HugeMethodLimit) "  OVER JIT LIMIT" else ""
+        println(f"[codegen] max method $bytes%6d bytes$mark  ${stage.take(100)}")
+      }
       CacheTracker.releaseAll(blocking = true)
     }
     (1 to 3).foreach { it =>

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-provided parquet star schema (TESTDATA.md).
   * Plain `spark.read.parquet` so Catalyst gets full pushdown/pruning.
@@ -9,8 +11,29 @@ object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** inferred schema per (path, (name, length, mtime) of each file, the
+    * nanos-as-long setting that changes how events.ts is inferred) */
+  private val schemas = scala.collection.concurrent.TrieMap
+    .empty[(String, Seq[(String, Long, Long)], String), StructType]
+
+  /** Parquet schema inference reads a footer in a Spark job of its own;
+    * each table file is inferred once per JVM while it is unchanged, and
+    * every later read passes that schema. */
+  private def schema(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = fs.listStatus(p).toSeq
+      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime))
+    schemas.getOrElseUpdate((fs.makeQualified(p).toString, files,
+      spark.conf.get(NanosAsLong, "false")), spark.read.parquet(path).schema)
+  }
+
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(schema(spark, path)).parquet(path)
+  }
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "orders")
@@ -38,7 +61,7 @@ object Tables {
         "TIMESTAMP->TIMESTAMP_NTZ cast is instant-preserving only under " +
         "UTC); configure the session with Sessions.local or set the conf " +
         "before loading")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set(NanosAsLong, "true")
     val df = table(spark, sfDir, "events")
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftColumnBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
@@ -87,6 +87,30 @@ object HyperplaneCodes {
     w
   }
 
+  /** tables of `bits` bits that one [[HyperplaneCodeWord]] holds */
+  def tablesPerWord(bits: Int): Int = 63 / bits
+
+  /** Index of the first table whose `bits`-bit codes agree in two rows of
+    * packed code words, or -1 if none does. Table g sits in word
+    * g / tablesPerWord(bits), slot g % tablesPerWord(bits). */
+  def firstMatch(wsa: ArrayData, wsb: ArrayData, tables: Int, bits: Int): Int = {
+    val perWord = tablesPerWord(bits)
+    val mask = (1L << bits) - 1
+    var g = 0
+    var k = 0
+    while (g < tables) {
+      val diff = wsa.getLong(k) ^ wsb.getLong(k)
+      var slot = 0
+      while (slot < perWord && g < tables) {
+        if (((diff >>> (bits * slot)) & mask) == 0L) return g
+        slot += 1
+        g += 1
+      }
+      k += 1
+    }
+    -1
+  }
+
   def hyperplaneCodes(c: Column, numTables: Int, bits: Int, seed: Long): Column =
     GraftColumnBridge.column(
       HyperplaneCodes(GraftColumnBridge.expression(c), numTables, bits, seed))
@@ -94,13 +118,17 @@ object HyperplaneCodes {
   def hyperplaneCodeWord(c: Column, numTables: Int, bits: Int, seed: Long): Column =
     GraftColumnBridge.column(
       HyperplaneCodeWord(GraftColumnBridge.expression(c), numTables, bits, seed))
+
+  def firstMatchingTable(wsa: Column, wsb: Column, tables: Int, bits: Int): Column =
+    GraftColumnBridge.column(FirstMatchingTable(
+      GraftColumnBridge.expression(wsa), GraftColumnBridge.expression(wsb), tables, bits))
 }
 
 /** All `numTables` codes of [[HyperplaneCodes]] packed into one long
   * (table t occupies bits [t*bits, (t+1)*bits)) — lets downstream pair
-  * dedup ("keep a pair only at its first matching table") run as pure
-  * bitwise arithmetic inside whole-stage codegen instead of a per-row
-  * higher-order-function evaluation over code arrays. */
+  * dedup ("keep a pair only at its first matching table") compare whole
+  * words in one [[FirstMatchingTable]] call per candidate pair instead of
+  * a per-row higher-order-function evaluation over code arrays. */
 case class HyperplaneCodeWord(child: Expression, numTables: Int, bits: Int, seed: Long)
     extends UnaryExpression {
   require(numTables * bits <= 63, "packed code word must fit a signed long")
@@ -117,4 +145,27 @@ case class HyperplaneCodeWord(child: Expression, numTables: Int, bits: Int, seed
 
   override protected def withNewChildInternal(newChild: Expression): HyperplaneCodeWord =
     copy(child = newChild)
+}
+
+/** [[HyperplaneCodes.firstMatch]] over two `array<bigint>` rows of packed
+  * code words: the LSH pair-dedup test as one static call per row. Spelled
+  * as composed shifts, masks and a CASE per word, the same test generated
+  * a method over HotSpot's 8000-byte JIT limit at 40 tables × 6 bits, so
+  * it ran interpreted. */
+case class FirstMatchingTable(left: Expression, right: Expression, tables: Int, bits: Int)
+    extends BinaryExpression {
+
+  override def dataType: DataType = IntegerType
+  override def nullIntolerant: Boolean = true
+
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    HyperplaneCodes.firstMatch(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], tables, bits)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"graft.functions.HyperplaneCodes.firstMatch($a, $b, $tables, $bits)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): FirstMatchingTable =
+    copy(left = newLeft, right = newRight)
 }

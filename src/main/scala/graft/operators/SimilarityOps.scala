@@ -192,7 +192,7 @@ object SimilarityOps {
     * word via seed+wordIdx). Global table g lives in word g/tablesPerWord,
     * slot g%tablesPerWord. */
   final case class NearDupPlan(tau: Double, tables: Int, bits: Int) {
-    val tablesPerWord: Int = 63 / bits
+    val tablesPerWord: Int = graft.functions.HyperplaneCodes.tablesPerWord(bits)
     val nWords: Int = (tables + tablesPerWord - 1) / tablesPerWord
     def tablesInWord(k: Int): Int = math.min(tablesPerWord, tables - k * tablesPerWord)
     /** estimated broadcast bytes per vector for the band side */
@@ -206,12 +206,9 @@ object SimilarityOps {
 
   /** LSH bucket candidate pairs (a, b) for a threshold plan, each pair
     * emitted exactly once — at its FIRST matching global table — so no
-    * distinct shuffle is needed. "All tables before g differ" is pure bit
-    * math on the packed words: OR the xor over all bits-1 right-shifts so
-    * any differing bit lands on its group's low bit, then require every
-    * group before table g to differ — within g's own word via the
-    * below-slot mask, and in every earlier word via that word's full group
-    * mask. Valid for any bits width and any word count. */
+    * distinct shuffle is needed: a pair joined on table g is kept only
+    * when [[graft.functions.FirstMatchingTable]] over both rows' packed
+    * words is g. Valid for any bits width and any word count. */
   def nearDupCandidates(spark: SparkSession, sfDir: String, tau: Double): DataFrame = {
     val e = embeddings(spark, sfDir)
     // metadata-only parquet count: sizes the LSH shape (bits grow with
@@ -246,21 +243,8 @@ object SimilarityOps {
         s"(element_at(ws, CAST(g DIV $tpw AS INT) + 1) >> ($b * (g % $tpw))) & ${(1 << b) - 1}"))
     val x = bands.select(col("vec_id").as("a"), col("ws").as("wsa"), col("g"), col("code"))
     val y = bands.select(col("vec_id").as("b"), col("ws").as("wsb"), col("g"), col("code"))
-    def collapsed(k: Int): String = (0 until b)
-      .map(s => s"((element_at(wsa, ${k + 1}) ^ element_at(wsb, ${k + 1})) >> $s)")
-      .mkString("(", " | ", ")")
-    def groupMask(k: Int): Long =
-      (0 until plan.tablesInWord(k)).map(t => 1L << (b * t)).reduce(_ | _)
-    // every word before g's word must differ in EVERY table...
-    val earlierWords = (0 until plan.nWords).map { k =>
-      s"((g DIV $tpw) <= $k OR ((${collapsed(k)} & ${groupMask(k)}L) = ${groupMask(k)}L))"
-    }.mkString(" AND ")
-    // ...and within g's word, every table before g's slot must differ
-    val withinWord = (0 until plan.nWords).map { k =>
-      val below = s"((shiftleft(CAST(1 AS BIGINT), $b * (g % $tpw)) - 1) & ${groupMask(k)}L)"
-      s"WHEN (g DIV $tpw) = $k THEN ((${collapsed(k)} & $below) = $below)"
-    }.mkString(" ")
-    val firstMatch = expr(s"($earlierWords) AND (CASE $withinWord END)")
+    val firstMatch = graft.functions.HyperplaneCodes.firstMatchingTable(
+      col("wsa"), col("wsb"), plan.tables, b) === col("g")
     x.join(hinted(y), Seq("g", "code"))
       .filter(col("a") < col("b") && firstMatch)
       .select("a", "b")

@@ -423,10 +423,11 @@ object SketchOps {
     // dropped INSIDE the scan stage — the ≤66-long word table collects to
     // the driver (bounded by the filter shape, not the data — the PQ-
     // codebook pattern) and probes as an inlined literal array, so the
-    // whole prefilter is per-row arithmetic in the scan's codegen span,
-    // exactly how engines ship runtime filters to scans (vs the 4-way
-    // broadcast-join formulation, measured ~4x slower at sf0.1: four
-    // build-side stages + a 4-join chain for what is one array lookup).
+    // whole prefilter runs in the scan's codegen span — one H8Digits call
+    // plus a word lookup per hash function — exactly how engines ship
+    // runtime filters to scans (vs the 4-way broadcast-join formulation,
+    // measured ~4x slower at sf0.1: four build-side stages + a 4-join
+    // chain for what is one array lookup).
     GraftQuery("join_bloom_prefilter",
       """WITH d AS (SELECT c_custkey FROM customer
         |           WHERE c_mktsegment = 'BUILDING' AND c_acctbal > 8000)
@@ -444,10 +445,9 @@ object SketchOps {
       bloomWords(dim, col("c_custkey")).collect()
         .foreach(r => wordArr(r.getLong(0).toInt) = r.getLong(1))
       val wordsLit = array(wordArr.toSeq.map(lit(_)): _*)
-      // the DIGIT form of H8: predicate pushdown re-inlines the hash into
-      // every filter conjunct (8x per row, no CSE), so the hash must be
-      // cheap standalone — the string-chain form here was measured at
-      // ~10x the whole query's runtime
+      // the DIGIT form of H8, no string per row: predicate pushdown
+      // re-inlines the hash into every filter conjunct, so each of the
+      // BloomK conjuncts pays one H8Digits call of ~8 integer digits
       val h = PortableHash.h8Digits(col("o_custkey"))
       val withBits = Tables.orders(spark, sfDir)
         .select((Seq(col("o_custkey"), col("o_orderpriority"),

@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{DotProduct, MinHashSigAgg, PortableHash, ShingleHashes}
+import graft.functions.{DotProduct, HyperplaneCodes, MinHashSigAgg, PortableHash, ShingleHashes}
 
 /** Custom Catalyst extensions must be drop-in equivalent to the composed
   * built-in forms they replace (the DuckDB oracles are written against the
@@ -193,5 +194,103 @@ class ExpressionSpec extends AnyFunSuite {
         PortableHash.h8Digits(col("k")).as("d"))
       .filter(col("s") =!= col("d")).count()
     assert(bad == 0L, "digit-form H8 drifted from the string form")
+  }
+
+  /** a frame as a local relation (the optimizer folds projections over it
+    * through the interpreted `eval`) and repartitioned (whole-stage codegen) */
+  private def bothPaths(df: DataFrame): Seq[DataFrame] = Seq(df, df.repartition(2))
+
+  /** The composed first-match test the LSH pair dedup used before
+    * FirstMatchingTable: every table before g differs between `wsa` and
+    * `wsb`. OR-ing the xor over all bits-1 right-shifts lands any
+    * differing bit on its group's low bit; every earlier word must differ
+    * in all its groups, g's own word in the groups below g's slot. */
+  private def composedEarlierTablesDiffer(tables: Int, b: Int): Column = {
+    val tpw = HyperplaneCodes.tablesPerWord(b)
+    val nWords = (tables + tpw - 1) / tpw
+    def collapsed(k: Int): String = (0 until b)
+      .map(s => s"((element_at(wsa, ${k + 1}) ^ element_at(wsb, ${k + 1})) >> $s)")
+      .mkString("(", " | ", ")")
+    def groupMask(k: Int): Long =
+      (0 until math.min(tpw, tables - k * tpw)).map(t => 1L << (b * t)).reduce(_ | _)
+    val earlierWords = (0 until nWords).map { k =>
+      s"((g DIV $tpw) <= $k OR ((${collapsed(k)} & ${groupMask(k)}L) = ${groupMask(k)}L))"
+    }.mkString(" AND ")
+    val withinWord = (0 until nWords).map { k =>
+      val below = s"((shiftleft(CAST(1 AS BIGINT), $b * (g % $tpw)) - 1) & ${groupMask(k)}L)"
+      s"WHEN (g DIV $tpw) = $k THEN ((${collapsed(k)} & $below) = $below)"
+    }.mkString(" ")
+    expr(s"($earlierWords) AND (CASE $withinWord END)")
+  }
+
+  test("FirstMatchingTable == composed shift/mask/CASE first-match predicate") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val rnd = new scala.util.Random(14)
+    // (40, 6) is the sf0.01 near-dup shape; (9, 7) fills a word exactly
+    Seq((40, 6), (9, 7), (24, 2), (5, 13)).foreach { case (tables, bits) =>
+      val tpw = HyperplaneCodes.tablesPerWord(bits)
+      def pack(codes: Array[Int]): Seq[Long] = codes.grouped(tpw).map(_.zipWithIndex
+        .map { case (c, slot) => c.toLong << (bits * slot) }.reduce(_ | _)).toSeq
+      // rows from identical (first match 0) to fully distinct (no match)
+      val rows = (0 until 300).map { r =>
+        val a = Array.fill(tables)(rnd.nextInt(1 << bits))
+        val keep = Seq(1.0, 0.5, 0.1, 0.02, 0.0, -1.0)(r % 6)
+        val b = a.map { c =>
+          if (keep < 0) c ^ 1
+          else if (rnd.nextDouble() < keep) c
+          else rnd.nextInt(1 << bits)
+        }
+        (pack(a), pack(b))
+      }
+      val pairs = rows.toDF("wsa", "wsb")
+        .withColumn("g", explode(sequence(lit(0), lit(tables - 1))))
+      def code(ws: String): Column = expr(
+        s"(element_at($ws, CAST(g DIV $tpw AS INT) + 1) >> ($bits * (g % $tpw))) & ${(1 << bits) - 1}")
+      bothPaths(pairs).foreach { df =>
+        val got = df.select(
+            (composedEarlierTablesDiffer(tables, bits) && code("wsa") === code("wsb")).as("old"),
+            HyperplaneCodes.firstMatchingTable(col("wsa"), col("wsb"), tables, bits).as("first"),
+            col("g"))
+          .collect()
+        got.foreach(r => assert(r.getBoolean(0) == (r.getInt(1) == r.getInt(2)),
+          s"$tables x $bits: composed ${r.getBoolean(0)}, first match ${r.getInt(1)} at g ${r.getInt(2)}"))
+        val firsts = got.map(_.getInt(1)).toSet
+        assert(firsts(0) && firsts(-1) && firsts.exists(_ > 0), s"$tables x $bits: $firsts")
+      }
+    }
+  }
+
+  test("H8 kernel == composed ascii/substring chain, past the end and beyond ASCII") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val composed = (0 to 7).map(j =>
+      ascii(substring(col("s"), j + 1, 1)).cast("long") * lit(PortableHash.Pow31(j))).reduce(_ + _)
+    val strings = Seq(null, "", "a", "abcdefg", "abcdefgh", "abcdefghijk", "ab\u0000cd",
+      "héllo wörld", "日本語のテキストです", "ÿ€x", "😀a𝄞b😀c𝄞d😀e", "a😀").toDF("s")
+    // bytes that are not valid UTF-8: a lone lead byte, a cut sequence, a
+    // stray continuation byte
+    val malformed = Seq("61C362", "E282", "F09F98", "8041424344454647", "41FF42")
+      .toDF("x").select(unhex(col("x")).cast("string").as("s"))
+    (bothPaths(strings) ++ bothPaths(malformed)).foreach { df =>
+      val rows = df.select(col("s"), PortableHash.h8(col("s")).as("k"), composed.as("c")).collect()
+      rows.foreach(r => assert(r.get(1) == r.get(2), s"'${r.getString(0)}': ${r.get(1)} != ${r.get(2)}"))
+    }
+  }
+
+  test("h8Digits kernel == composed floor/remainder digit chain, negative and null keys") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val composed = (0 to 7).map { j =>
+      val p = math.pow(10, (7 - j).toDouble).toLong
+      (lit(48L) + (floor(col("k").cast("long") / lit(p)).cast("long") % 10)) * lit(PortableHash.Pow31(j))
+    }.reduce(_ + _)
+    val keys = Seq[Option[Long]](Some(0L), Some(7L), Some(99999999L), Some(100000000L),
+      Some(123456789012L), Some(-1L), Some(-10L), Some(-99999999L), Some(-123456789L),
+      Some(Long.MaxValue), Some(Long.MinValue), None).toDF("k")
+    bothPaths(keys).foreach { df =>
+      val rows = df.select(col("k"), PortableHash.h8Digits(col("k")).as("d"), composed.as("c")).collect()
+      rows.foreach(r => assert(r.get(1) == r.get(2), s"key ${r.get(0)}: ${r.get(1)} != ${r.get(2)}"))
+    }
   }
 }
