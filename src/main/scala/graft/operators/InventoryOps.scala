@@ -784,10 +784,9 @@ object InventoryOps {
     // dropped tie, or batch reordering all hash-mismatch. Folder entries
     // carry "now" mtimes (> every file's), so they drain in trailing
     // batches that the files-only filter empties — file batch numbering
-    // is deterministic. Runs with distributedOffsets=true so the oracle
-    // replays the DISTRIBUTED bounded walk (per-subtree top-n heads
-    // merged on the driver) — the billion-file-backlog configuration;
-    // driver-walk parity is differentially pinned in SourcesSpec.
+    // is deterministic. The drain runs the source's only offset path,
+    // the distributed bounded fold (per-subtree top-n heads merged by a
+    // tree reduce), the billion-file-backlog configuration.
     GraftQuery("stream_inventory_backlog",
       """WITH RECURSIVE fl AS (
         |  SELECT (l_orderkey % 1000) * 1000 AS m, CAST(l_linenumber AS BIGINT) AS ln
@@ -821,8 +820,7 @@ object InventoryOps {
       val ckpt = Files.createTempDirectory("graft_inv_backlog_ckpt").toString
       val out = Files.createTempDirectory("graft_inv_backlog_out").toString + "/rows"
       val q = spark.readStream.format("graft-inventory").option("root", root)
-        .option("maxFilesPerTrigger", "16")
-        .option("distributedOffsets", "true").load()
+        .option("maxFilesPerTrigger", "16").load()
         .select("parent_directory", "is_folder", "length")
         .filter(!col("is_folder"))
         .writeStream.outputMode("append")

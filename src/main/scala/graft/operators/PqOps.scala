@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.GraftQuery
+import graft.Tables
 import graft.functions.CentroidArgmin
 
 /** Product quantization (Jégou, Douze, Schmid: "Product Quantization for
@@ -52,13 +53,10 @@ object PqOps {
 
   import SimilarityOps.{NumQueries, TopK}
 
-  private def embeddings(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Tables.embeddings(spark, sfDir)
-
   /** quantized integer components as one array column per vector — the
     * same ⌊x·10⁶⌋ quantization every similarity operator shares */
   private def quantized(spark: SparkSession, sfDir: String): DataFrame =
-    embeddings(spark, sfDir).select(col("vec_id"),
+    Tables.embeddings(spark, sfDir).select(col("vec_id"),
       expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT))")
         .as("xq"))
 
@@ -76,7 +74,7 @@ object PqOps {
     * One bounded collect (SubK rows) + one aggregation (≤ 1 024 rows). */
   private def pqCodebookUncached(spark: SparkSession, sfDir: String): Array[Array[Array[Long]]] = {
     val q = quantized(spark, sfDir)
-    val n = embeddings(spark, sfDir).count()
+    val n = Tables.embeddings(spark, sfDir).count()
     require(n >= SubK, s"PQ needs at least $SubK vectors, corpus has $n")
     val step = n / SubK
     val seedIds = Array.tabulate(SubK)(c => c * step)

@@ -140,9 +140,6 @@ object SimilarityOps {
   private def wExprSql(h: String, i: String): String =
     s"(((1 + 37 * $h + 101 * $i + 13 * $h * $i) % 19) - 9)"
 
-  private def embeddings(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.embeddings(spark, sfDir)
-
   /** Number of inverted lists probed per query in sim_ann_ivf. Chosen by
     * a measured nprobe sweep (SweepIvf, removed after 26c7766) to hold
     * recall@10 ≥ 0.8 on the demo corpus: recall = 0.81 (sf0.001) / 0.84
@@ -210,7 +207,7 @@ object SimilarityOps {
     * when [[graft.functions.FirstMatchingTable]] over both rows' packed
     * words is g. Valid for any bits width and any word count. */
   def nearDupCandidates(spark: SparkSession, sfDir: String, tau: Double): DataFrame = {
-    val e = embeddings(spark, sfDir)
+    val e = Tables.embeddings(spark, sfDir)
     // metadata-only parquet count: sizes the LSH shape (bits grow with
     // log2 n, see nearDupParams) and gates the broadcast hints
     val n = e.count()
@@ -259,7 +256,7 @@ object SimilarityOps {
     * candidate pair (3× fewer flops in the verify stage, bit-identical
     * doubles). */
   def nearDupPairsAt(spark: SparkSession, sfDir: String, tau: Double): DataFrame = {
-    val e = embeddings(spark, sfDir)
+    val e = Tables.embeddings(spark, sfDir)
     val smallCorpus = e.count() <= BroadcastMaxVectors
     def hinted(df: DataFrame): DataFrame = if (smallCorpus) broadcast(df) else df
     val cands = nearDupCandidates(spark, sfDir, tau)
@@ -304,7 +301,7 @@ object SimilarityOps {
 
   /** Spark twin of [[CentroidCte]]: (vec_id, label, clabel, score) */
   private def centroidScored(spark: SparkSession, sfDir: String): DataFrame = {
-    val comps = embeddings(spark, sfDir)
+    val comps = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("label"),
         posexplode(toDouble(col("embedding"))).as(Seq("i", "x")))
       .select(col("vec_id"), col("label"), col("i"),
@@ -366,7 +363,7 @@ object SimilarityOps {
     // the ~K init steps + Lloyd rounds that scan it (the oracle's exact
     // integer semantics, but scan-shaped: every step below is ONE pass
     // over this frame — no join on components, no n×K shuffle, no window)
-    val q = embeddings(spark, sfDir)
+    val q = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"),
         expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT))").as("xq"))
       .withColumn("n2", expr("aggregate(xq, 0L, (a, x) -> a + x * x)"))
@@ -493,7 +490,7 @@ object SimilarityOps {
     * (session, sfDir). Where the FULL ranking matters (probe lists),
     * rankedFor remains the machinery. */
   private def kmeansAssign(spark: SparkSession, sfDir: String): DataFrame =
-    embeddings(spark, sfDir).select(col("vec_id"),
+    Tables.embeddings(spark, sfDir).select(col("vec_id"),
       graft.functions.CentroidArgmin
         .centroidArgmin(col("embedding"), kmeansCodebook(spark, sfDir)).as("cluster"))
 
@@ -508,7 +505,7 @@ object SimilarityOps {
     }.toSeq.toDF("cluster", "i", "x")
     val n2c = cents.zipWithIndex.map { case (cs, c) => (c, cs.map(x => x * x).sum) }
       .toSeq.toDF("cluster", "n2c")
-    quantComps(vecs.getOrElse(embeddings(spark, sfDir)))
+    quantComps(vecs.getOrElse(Tables.embeddings(spark, sfDir)))
       .join(broadcast(centRows), Seq("i"))
       .groupBy("vec_id", "cluster").agg(sum(col("xq") * col("x")).as("dp"))
       .join(broadcast(n2c), Seq("cluster"))
@@ -523,7 +520,7 @@ object SimilarityOps {
     * oracled query and the corpus-scaled [[semDedupScaled]]. */
   private def semDedupFrom(spark: SparkSession, sfDir: String,
       assign: DataFrame): DataFrame = {
-    val v = embeddings(spark, sfDir)
+    val v = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), toDouble(col("embedding")).as("ve"))
       .withColumn("nv", norm(col("ve")))
     // persist ONCE: the assignment pipeline (quantComps explode + K-way
@@ -565,7 +562,7 @@ object SimilarityOps {
     * DuckDB-checked" while the scaled path is exercised end-to-end. */
   def semDedupScaled(spark: SparkSession, sfDir: String,
       targetOccupancy: Int = 200, sampleCap: Int = 4096): DataFrame = {
-    val e = embeddings(spark, sfDir)
+    val e = Tables.embeddings(spark, sfDir)
     val n = e.count()
     val k = math.max(2, math.ceil(n.toDouble / targetOccupancy).toInt)
     require(k <= sampleCap, s"codebook K=$k exceeds the $sampleCap-vector sample")
@@ -822,7 +819,7 @@ object SimilarityOps {
     // vectors — the n×K explosion never touches the corpus side
     val assign = kmeansAssign(spark, sfDir).withColumnRenamed("cluster", "list")
     val probes = rankedFor(spark, sfDir, kmeansCodebook(spark, sfDir),
-        Some(embeddings(spark, sfDir).filter(col("vec_id") < NumQueries)))
+        Some(Tables.embeddings(spark, sfDir).filter(col("vec_id") < NumQueries)))
       .filter(col("r") <= IvfProbes)
       .select(col("vec_id").as("qid"), col("cluster").as("list"))
     assign.join(broadcast(probes), Seq("list"))
@@ -835,7 +832,7 @@ object SimilarityOps {
     * pair join, 6-dp round before ranking so engines order identically. */
   private[operators] def rerankCands(spark: SparkSession, sfDir: String,
       cands: DataFrame, maxSim: Option[Double] = None): DataFrame = {
-    val e = embeddings(spark, sfDir)
+    val e = Tables.embeddings(spark, sfDir)
     val q = e.select(col("vec_id").as("qid"), toDouble(col("embedding")).as("qe"))
       .withColumn("nq", norm(col("qe")))
     val c = e.select(col("vec_id").as("nid"), toDouble(col("embedding")).as("ne"))
@@ -886,7 +883,7 @@ object SimilarityOps {
 
   private def scaledCodebook(spark: SparkSession, sfDir: String): Array[Array[Long]] =
     scaledCodebookCache.getOrElseUpdate((spark, sfDir), {
-      val q = embeddings(spark, sfDir)
+      val q = Tables.embeddings(spark, sfDir)
         .select(col("vec_id"),
           expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT))").as("xq"))
         .transform(graft.CacheTracker.persist)
@@ -934,11 +931,11 @@ object SimilarityOps {
     * ranking for their probe lists. */
   def ivfScaledTopK(spark: SparkSession, sfDir: String): DataFrame = {
     val cents = scaledCodebook(spark, sfDir)
-    val assign = embeddings(spark, sfDir).select(col("vec_id"),
+    val assign = Tables.embeddings(spark, sfDir).select(col("vec_id"),
       graft.functions.CentroidArgmin
         .centroidArgmin(col("embedding"), cents).as("list"))
     val probes = rankedFor(spark, sfDir, cents,
-        Some(embeddings(spark, sfDir).filter(col("vec_id") < NumQueries)))
+        Some(Tables.embeddings(spark, sfDir).filter(col("vec_id") < NumQueries)))
       .filter(col("r") <= IvfProbes)
       .select(col("vec_id").as("qid"), col("cluster").as("list"))
     val cands = assign.join(broadcast(probes), Seq("list"))
@@ -953,7 +950,7 @@ object SimilarityOps {
     * same double either way) — recomputing them per pair would triple the
     * flops of the dominant stage. */
   def bruteForce(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = embeddings(spark, sfDir)
+    val e = Tables.embeddings(spark, sfDir)
     val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), toDouble(col("embedding")).as("qe"))
       .withColumn("nq", norm(col("qe")))
@@ -1242,14 +1239,14 @@ object SimilarityOps {
          |  ON brute.qid = t.qid AND brute.nid = t.nid
          |GROUP BY t.nprobe ORDER BY nprobe""".stripMargin) { (spark, sfDir) =>
       val probes = rankedFor(spark, sfDir, kmeansCodebook(spark, sfDir),
-          Some(embeddings(spark, sfDir).filter(col("vec_id") < NumQueries)))
+          Some(Tables.embeddings(spark, sfDir).filter(col("vec_id") < NumQueries)))
         .filter(col("r") <= NprobeMax)
         .select(col("vec_id").as("qid"), col("cluster").as("list"), col("r").as("pr"))
       val assign = kmeansAssign(spark, sfDir).withColumnRenamed("cluster", "list")
       val cands = assign.join(broadcast(probes), Seq("list"))
         .filter(col("vec_id") =!= col("qid"))
         .select(col("qid"), col("vec_id").as("nid"), col("pr"))
-      val e = embeddings(spark, sfDir)
+      val e = Tables.embeddings(spark, sfDir)
       val q = e.select(col("vec_id").as("qid"), toDouble(col("embedding")).as("qe"))
         .withColumn("nq", norm(col("qe")))
       val c = e.select(col("vec_id").as("nid"), toDouble(col("embedding")).as("ne"))
@@ -1368,7 +1365,7 @@ object SimilarityOps {
       }.toSeq.toDF("c", "i", "x")
       val n2c = cents.zipWithIndex.map { case (cs, c) => (c, cs.map(x => x * x).sum) }
         .toSeq.toDF("c", "n2c")
-      val q = quantComps(embeddings(spark, sfDir))
+      val q = quantComps(Tables.embeddings(spark, sfDir))
       val n2v = q.groupBy("vec_id").agg(sum(col("xq") * col("xq")).as("n2"))
       val d2 = q.join(broadcast(centRows), Seq("i"))
         .groupBy("vec_id", "c").agg(sum(col("xq") * col("x")).as("dp"))
@@ -1475,7 +1472,7 @@ object SimilarityOps {
         |       CAST(list_sum(q) AS BIGINT) AS qsum,
         |       CAST(list_sum(list_transform(q, v -> v * v)) AS BIGINT) AS qnorm2
         |FROM qq ORDER BY vec_id""".stripMargin) { (spark, sfDir) =>
-      embeddings(spark, sfDir)
+      Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), toDouble(col("embedding")).as("ed"))
         .withColumn("mx", array_max(transform(col("ed"), x => abs(x))))
         .withColumn("q", transform(col("ed"),
@@ -1589,7 +1586,7 @@ object SimilarityOps {
          |SELECT vec_id, max_sim6, max_sim6 >= $NearDupThreshold AS contaminated
          |FROM m ORDER BY vec_id""".stripMargin,
       bench = true) { (spark, sfDir) =>
-      val e = embeddings(spark, sfDir)
+      val e = Tables.embeddings(spark, sfDir)
       val ev = e.filter(col("vec_id") % 50 === 7)
         .select(toDouble(col("embedding")).as("ee"))
         .withColumn("ne", norm(col("ee")))
@@ -1655,7 +1652,7 @@ object SimilarityOps {
         |       CAST(sum(xm * xm) AS BIGINT) AS ss_mq,
         |       min(xq) AS min_q, max(xq) AS max_q
         |FROM comps GROUP BY i ORDER BY i""".stripMargin) { (spark, sfDir) =>
-      embeddings(spark, sfDir)
+      Tables.embeddings(spark, sfDir)
         .select(posexplode(col("embedding")).as(Seq("i", "x")))
         .select(col("i").cast("long").as("i"),
           floor(col("x").cast("double") * 1000000).cast("long").as("xq"),
@@ -1718,7 +1715,7 @@ object SimilarityOps {
          |        GROUP BY brute.qid)
          |SELECT qid, n_hit, (n_hit * 100) // $TopK AS recall_pct
          |FROM hit ORDER BY qid""".stripMargin) { (spark, sfDir) =>
-      val base = embeddings(spark, sfDir)
+      val base = Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), toDouble(col("embedding")).as("ed"))
         .withColumn("mx", array_max(transform(col("ed"), x => abs(x))))
         .withColumn("q", transform(col("ed"),
@@ -1779,7 +1776,7 @@ object SimilarityOps {
          |       p.pred_label = CAST(e.label AS BIGINT) AS correct
          |FROM pred p JOIN embeddings e ON e.vec_id = p.qid
          |ORDER BY p.qid""".stripMargin) { (spark, sfDir) =>
-      val labels = embeddings(spark, sfDir)
+      val labels = Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), col("label").cast("long").as("label"))
       val votes = bruteForce(spark, sfDir).select("qid", "nid")
         .join(labels.select(col("vec_id").as("nid"), col("label")), "nid")
@@ -1815,7 +1812,7 @@ object SimilarityOps {
          |FROM mj JOIN tt USING (cluster) ORDER BY cluster""".stripMargin) {
       (spark, sfDir) =>
       val lc = kmeansAssign(spark, sfDir)
-        .join(embeddings(spark, sfDir).select(col("vec_id"), col("label")), "vec_id")
+        .join(Tables.embeddings(spark, sfDir).select(col("vec_id"), col("label")), "vec_id")
         .groupBy("cluster", "label").agg(count(lit(1)).as("n"))
       val tt = lc.groupBy("cluster").agg(sum("n").as("n_total"))
       val w = Window.partitionBy("cluster").orderBy(col("n").desc, col("label"))
@@ -1843,7 +1840,7 @@ object SimilarityOps {
         |       CAST(count(*) AS BIGINT) AS n_vecs,
         |       CAST(min(n2) AS BIGINT) AS min_n2, CAST(max(n2) AS BIGINT) AS max_n2
         |FROM q GROUP BY bucket ORDER BY bucket""".stripMargin) { (spark, sfDir) =>
-      embeddings(spark, sfDir)
+      Tables.embeddings(spark, sfDir)
         .select(aggregate(
           transform(col("embedding"),
             x => floor(x.cast("double") * 1000).cast("long")),
@@ -1885,7 +1882,7 @@ object SimilarityOps {
         |       abs(CAST((s_a - ((s_a % n_a) + n_a) % n_a) // n_a
         |         - (s_b - ((s_b % n_b) + n_b) % n_b) // n_b AS BIGINT)) AS shift_q
         |FROM m ORDER BY i""".stripMargin) { (spark, sfDir) =>
-      val g = embeddings(spark, sfDir)
+      val g = Tables.embeddings(spark, sfDir)
         .select((col("vec_id") % 2).as("slice"),
           posexplode(col("embedding")).as(Seq("i", "x")))
         .select(col("slice"), col("i").cast("long").as("i"),
@@ -1911,7 +1908,7 @@ object SimilarityOps {
     * Integer 1e6-quantized hyperplane dots make the codes bit-exact
     * across engines and partial-agg orders. */
   def lshCandidates(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = embeddings(spark, sfDir)
+    val e = Tables.embeddings(spark, sfDir)
     // (vec_id, i, xq): 1e6-quantized integer component per row
     val comps = e.select(col("vec_id"),
         posexplode(toDouble(col("embedding"))).as(Seq("i", "x")))

@@ -30,9 +30,6 @@ object TextOps {
   private def hitsSql(tokensExpr: String, ws: Seq[String]): String =
     s"CAST(len(list_filter($tokensExpr, t -> list_contains(${sqlList(ws)}, t))) AS BIGINT)"
 
-  private def docs(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.documents(spark, sfDir)
-
   /** The corpus_clean quality+language gate as shared CTEs `t` (tokenized
     * docs), `f` (per-doc keep_q / is_en verdicts) and `surv` (survivors) —
     * one definition consumed by corpus_clean AND the end-to-end
@@ -96,7 +93,7 @@ object TextOps {
     * clean). Filter survivors on `clean` (one conjunct → one tokenize per
     * row even after predicate pushdown), never on `keep_q && is_en`. */
   private[operators] def cleanFlags(spark: SparkSession, sfDir: String): DataFrame =
-    docs(spark, sfDir)
+    Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"), expr(flagsExprSql).as("fl"))
       .select(col("doc_id"), col("text"),
         col("fl.keep_q").as("keep_q"), col("fl.is_en").as("is_en"),
@@ -119,7 +116,7 @@ object TextOps {
          |       ELSE CAST(${hitsSql("toks", StopEn)} AS DOUBLE) / CAST(len(toks) AS BIGINT)
          |  END AS stop_ratio
          |FROM t ORDER BY doc_id""".stripMargin) { (spark, sfDir) =>
-      val t = docs(spark, sfDir)
+      val t = Tables.documents(spark, sfDir)
         .withColumn("toks", expr("regexp_extract_all(text, '[a-z0-9]+', 0)"))
       t.select(
         col("doc_id"),
@@ -149,7 +146,7 @@ object TextOps {
          |  CASE WHEN en_hits >= de_hits AND en_hits >= fr_hits THEN 'en'
          |       WHEN de_hits >= fr_hits THEN 'de' ELSE 'fr' END AS pred_lang
          |FROM h ORDER BY doc_id""".stripMargin) { (spark, sfDir) =>
-      docs(spark, sfDir)
+      Tables.documents(spark, sfDir)
         .withColumn("toks", expr("regexp_extract_all(text, '[a-z0-9]+', 0)"))
         .select(col("doc_id"),
           hits(col("toks"), StopEn).as("en_hits"),
@@ -200,7 +197,7 @@ object TextOps {
          |SELECT CASE WHEN np = 0 OR nc = np THEN NULL
          |         ELSE (r2 - np * (np + 1)) * 1000000 // (2 * np * (nc - np)) END AS auc_ppm,
          |       np AS n_pos, nc - np AS n_neg FROM a""".stripMargin) { (spark, sfDir) =>
-      val sc = docs(spark, sfDir)
+      val sc = Tables.documents(spark, sfDir)
         .withColumn("toks", expr("regexp_extract_all(text, '[a-z0-9]+', 0)"))
         .select(hits(col("toks"), StopEn).as("eh"),
           greatest(hits(col("toks"), StopDe), hits(col("toks"), StopFr)).as("oh"),
@@ -252,7 +249,7 @@ object TextOps {
          |       CAST(g.n * 1000000 // tt.tot AS BIGINT) AS share_ppm
          |FROM g JOIN tt USING (lang)
          |ORDER BY g.lang, g.pred_lang""".stripMargin) { (spark, sfDir) =>
-      val p = docs(spark, sfDir)
+      val p = Tables.documents(spark, sfDir)
         .withColumn("toks", expr("regexp_extract_all(text, '[a-z0-9]+', 0)"))
         .select(col("lang"),
           hits(col("toks"), StopEn).as("e"),
@@ -275,7 +272,7 @@ object TextOps {
         |  CAST(len(regexp_split_to_array(trim(text), ' +')) AS BIGINT) AS n_ws,
         |  CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS BIGINT) AS n_bpe
         |FROM documents ORDER BY doc_id""".stripMargin) { (spark, sfDir) =>
-      docs(spark, sfDir).select(
+      Tables.documents(spark, sfDir).select(
         col("doc_id"),
         size(split(trim(col("text")), " +")).cast("long").as("n_ws"),
         size(expr("regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]', 0)")).cast("long")
@@ -303,7 +300,7 @@ object TextOps {
          |       (n_chars >= 100 AND n_tokens >= 20 AND distinct_ratio >= 0.2
          |        AND stop_ratio >= 0.01 AND stop_ratio <= 0.6) AS keep
          |FROM m ORDER BY doc_id""".stripMargin) { (spark, sfDir) =>
-      val t = docs(spark, sfDir)
+      val t = Tables.documents(spark, sfDir)
         .withColumn("toks", expr("regexp_extract_all(text, '[a-z0-9]+', 0)"))
       t.select(
         col("doc_id"),
@@ -352,7 +349,7 @@ object TextOps {
          |       - 1500 * abs(mean_len_c - 450)
          |       - 2000 * greatest(0, 20 - nt)) >= 800000 AS keep
          |FROM s ORDER BY doc_id""".stripMargin) { (spark, sfDir) =>
-      docs(spark, sfDir)
+      Tables.documents(spark, sfDir)
         .withColumn("toks", expr("regexp_extract_all(text, '[a-z0-9]+', 0)"))
         .select(col("doc_id"),
           size(col("toks")).cast("long").as("nt"),
@@ -393,7 +390,7 @@ object TextOps {
          |SELECT doc_id, CAST(unnest(fps) AS BIGINT) AS fp
          |FROM w ORDER BY doc_id, fp""".stripMargin
     }) { (spark, sfDir) =>
-      docs(spark, sfDir)
+      Tables.documents(spark, sfDir)
         .withColumn("h", graft.functions.ShingleHashes.shingleHashes(col("text"), 8))
         .filter(size(col("h")) >= 4)
         .withColumn("fps", array_distinct(expr(
@@ -484,7 +481,7 @@ object TextOps {
          |SELECT source, lang, n_docs, n_clean, clean_tokens,
          |       CAST(clean_tokens * 1000000 // (SELECT tt FROM tot) AS BIGINT) AS share_ppm
          |FROM g ORDER BY source, lang""".stripMargin) { (spark, sfDir) =>
-      val d = docs(spark, sfDir).select(col("doc_id"), col("source"), col("lang"),
+      val d = Tables.documents(spark, sfDir).select(col("doc_id"), col("source"), col("lang"),
         size(expr("regexp_extract_all(text, '[a-z0-9]+', 0)")).cast("long").as("n_toks"))
       val g = cleanFlags(spark, sfDir)
         .select(col("doc_id"), col("clean"))
@@ -516,7 +513,7 @@ object TextOps {
         |      FROM a)
         |SELECT split, count(*) AS n, min(doc_id) AS min_id, max(doc_id) AS max_id
         |FROM s GROUP BY split ORDER BY split""".stripMargin) { (spark, sfDir) =>
-      docs(spark, sfDir)
+      Tables.documents(spark, sfDir)
         .withColumn("bucket", (col("doc_id") % 100 * 61) % 100)
         .withColumn("split", when(col("bucket") < 90, "train")
           .when(col("bucket") < 95, "val").otherwise("test"))
@@ -542,7 +539,7 @@ object TextOps {
         |SELECT stratum, rnk, doc_id FROM r WHERE rnk <= 20
         |ORDER BY stratum, rnk""".stripMargin) { (spark, sfDir) =>
       val w = Window.partitionBy("stratum").orderBy("h", "doc_id")
-      docs(spark, sfDir)
+      Tables.documents(spark, sfDir)
         .select(col("doc_id"),
           when(length(col("text")) < 150, "short")
             .when(length(col("text")) < 300, "medium")
@@ -567,7 +564,7 @@ object TextOps {
         |  FROM t)
         |SELECT bigram, count(*) AS n FROM b
         |GROUP BY bigram ORDER BY n DESC, bigram LIMIT 50""".stripMargin) { (spark, sfDir) =>
-      docs(spark, sfDir)
+      Tables.documents(spark, sfDir)
         .withColumn("toks", expr("regexp_extract_all(text, '[a-z0-9]+', 0)"))
         // guard: slice() throws on negative length for a 0-token document,
         // where the oracle's generate_series(1, -1) yields empty instead
@@ -606,7 +603,7 @@ object TextOps {
         |FROM bc JOIN uni ua ON ua.w = bc.wa
         |        JOIN uni ub ON ub.w = bc.wb, nt
         |ORDER BY lift_ppm DESC, bigram LIMIT 30""".stripMargin) { (spark, sfDir) =>
-      val t = docs(spark, sfDir)
+      val t = Tables.documents(spark, sfDir)
         .withColumn("toks", expr("regexp_extract_all(text, '[a-z0-9]+', 0)"))
       val tok = t.select(explode(col("toks")).as("w"))
       val uni = tok.groupBy("w").agg(count(lit(1)).as("c"))
@@ -656,7 +653,7 @@ object TextOps {
         |            // count(*) AS BIGINT) AS novelty_pct
         |FROM tri JOIN fst USING (g)
         |GROUP BY tri.doc_id ORDER BY tri.doc_id""".stripMargin) { (spark, sfDir) =>
-      val tri = docs(spark, sfDir)
+      val tri = Tables.documents(spark, sfDir)
         .withColumn("toks", expr("regexp_extract_all(text, '[a-z0-9]+', 0)"))
         .select(col("doc_id"), explode(expr(
           "CASE WHEN size(toks) >= 3 THEN " +
@@ -695,7 +692,7 @@ object TextOps {
         |       round(CAST(sum(tt // c) AS DOUBLE) / count(*), 2) AS avg2
         |FROM tok JOIN tf USING (t) CROSS JOIN tot
         |GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (spark, sfDir) =>
-      val tok = docs(spark, sfDir)
+      val tok = Tables.documents(spark, sfDir)
         .select(col("doc_id"), explode(expr("regexp_extract_all(text, '[a-z0-9]+', 0)")).as("t"))
       val tf = tok.groupBy("t").agg(count(lit(1)).as("c"))
       val tot = tf.agg(sum("c").as("tt"))
@@ -749,7 +746,7 @@ object TextOps {
       // (bigram-vocabulary-sized) cb table instead of the occurrence
       // stream: cu(w1) = Σ_w2 cb exactly, and the distinct-token count v
       // sees every token that occurs in any bigram via cb's key set.
-      val bi = docs(spark, sfDir)
+      val bi = Tables.documents(spark, sfDir)
         .withColumn("toks", expr("regexp_extract_all(text, '[a-z0-9]+', 0)"))
         .filter(size(col("toks")) >= 2)
         .select(col("doc_id"), explode(expr(
@@ -782,7 +779,7 @@ object TextOps {
         |df AS (SELECT tok, count(*) AS docfreq FROM t GROUP BY tok)
         |SELECT tok, docfreq FROM df
         |ORDER BY docfreq DESC, tok LIMIT 50""".stripMargin) { (spark, sfDir) =>
-      docs(spark, sfDir)
+      Tables.documents(spark, sfDir)
         .select(col("doc_id"),
           explode(expr("regexp_extract_all(text, '[a-z0-9]+', 0)")).as("tok"))
         .distinct()
@@ -807,11 +804,11 @@ object TextOps {
         |      FROM s WHERE doc_id % 5 = 0)
         |SELECT doc_id, tok, score FROM r WHERE rn = 1 ORDER BY doc_id""".stripMargin,
       ) { (spark, sfDir) =>
-      val tok = docs(spark, sfDir)
+      val tok = Tables.documents(spark, sfDir)
         .select(col("doc_id"), explode(expr("regexp_extract_all(text, '[a-z0-9]+', 0)")).as("tok"))
       val tf = tok.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
       val dfreq = tok.distinct().groupBy("tok").agg(count(lit(1)).as("df"))
-      val n = docs(spark, sfDir).count()
+      val n = Tables.documents(spark, sfDir).count()
       val w = Window.partitionBy("doc_id").orderBy(col("score").desc, col("tok"))
       tf.join(dfreq, Seq("tok"))
         .select(col("doc_id"), col("tok"),
@@ -849,7 +846,7 @@ object TextOps {
         |SELECT e.doc_id, (nd.bid IS NOT NULL) AS near_dup
         |FROM exact_new e LEFT JOIN neardup nd ON nd.bid = e.doc_id
         |ORDER BY e.doc_id""".stripMargin) { (spark, sfDir) =>
-      val d = docs(spark, sfDir)
+      val d = Tables.documents(spark, sfDir)
       val corpus = d.filter(col("doc_id") < 400)
       val batch = d.filter(col("doc_id") >= 400)
       val exactNew = batch.join(corpus.select(md5(col("text").cast("binary")).as("h")).distinct(),
@@ -882,7 +879,7 @@ object TextOps {
          |SELECT doc_id, min(h) AS min_fp, max(h) AS max_fp,
          |       count(DISTINCT h) AS n_shingles
          |FROM sh GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (spark, sfDir) =>
-      docs(spark, sfDir)
+      Tables.documents(spark, sfDir)
         .select(col("doc_id"),
           explode(graft.functions.ShingleHashes.shingleHashes(col("text"), 8)).as("h"))
         .groupBy("doc_id")
@@ -922,7 +919,7 @@ object TextOps {
         |    * 1000000 // (SELECT total FROM nn) AS BIGINT) AS cum_share_ppm
         |FROM g ORDER BY decile""".stripMargin) { (spark, sfDir) =>
       import org.apache.spark.sql.expressions.Window
-      val base = docs(spark, sfDir).select("doc_id", "n_chars")
+      val base = Tables.documents(spark, sfDir).select("doc_id", "n_chars")
         .transform(graft.CacheTracker.persist)
       val (n, total) = {
         val r = base.agg(count(lit(1)), sum("n_chars")).head()
@@ -971,7 +968,7 @@ object TextOps {
         |            * 1000000 // max(tt.total) AS BIGINT) AS coverage_ppm
         |FROM r CROSS JOIN ks CROSS JOIN tt
         |GROUP BY ks.k, tt.n_types ORDER BY k""".stripMargin) { (spark, sfDir) =>
-      val tf = docs(spark, sfDir)
+      val tf = Tables.documents(spark, sfDir)
         .select(explode(expr("regexp_extract_all(text, '[a-z0-9]+', 0)")).as("tok"))
         .groupBy("tok").agg(count(lit(1)).as("cnt"))
         .transform(graft.CacheTracker.persist)
@@ -1020,7 +1017,7 @@ object TextOps {
         |  CAST((n * sxy - sx * sy) * 1000 // (n * sxx - sx * sx) AS BIGINT)
         |    AS slope_milli
         |FROM m""".stripMargin) { (spark, sfDir) =>
-      val tf = docs(spark, sfDir)
+      val tf = Tables.documents(spark, sfDir)
         .select(explode(expr("regexp_extract_all(text, '[a-z0-9]+', 0)")).as("tok"))
         .groupBy("tok").agg(count(lit(1)).as("cnt"))
       val xy = Prefix.scan(tf, "rn",
@@ -1071,7 +1068,7 @@ object TextOps {
          |         AS sim6
          |FROM dots d JOIN nrm na ON na.doc_id = d.a JOIN nrm nb ON nb.doc_id = d.b
          |ORDER BY sim6 DESC, a, b LIMIT 20""".stripMargin) { (spark, sfDir) =>
-      val tf = docs(spark, sfDir)
+      val tf = Tables.documents(spark, sfDir)
         .select(col("doc_id"),
           explode(expr("regexp_extract_all(text, '[a-z0-9]+', 0)")).as("tok"))
         .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))

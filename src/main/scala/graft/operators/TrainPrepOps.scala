@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -41,9 +41,6 @@ object TrainPrepOps {
     * document overlap (probed at sf0.01: eval-vs-corpus Jaccard is 0.96+
     * for true near-dups, ≤ 0.11 for everything else) */
   val FuzzyDecontamThreshold = 0.5
-
-  private def docs(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.documents(spark, sfDir)
 
   /** space-joined n-token-gram strings per row, empty when the doc is
     * shorter than n (sequence(1, negative) would count DOWN in Spark —
@@ -90,7 +87,7 @@ object TrainPrepOps {
          |FROM t LEFT JOIN ov ON ov.doc_id = t.doc_id
          |WHERE t.doc_id % 50 <> 7 ORDER BY t.doc_id""".stripMargin,
       bench = true) { (spark, sfDir) =>
-      val d = docs(spark, sfDir)
+      val d = Tables.documents(spark, sfDir)
       // grams are generated AFTER the split filters: the eval pipeline only
       // tokenizes the 2% benchmark slice, and the corpus side never
       // shuffles its grams — duplicates collapse in the per-doc
@@ -140,7 +137,7 @@ object TrainPrepOps {
         |  (CAST(n_bigrams - n_distinct_bg AS DOUBLE) / n_bigrams <= 0.1
         |   AND CAST(top_n AS DOUBLE) / n_bigrams <= 0.1) AS keep
         |FROM a ORDER BY doc_id""".stripMargin) { (spark, sfDir) =>
-      val t = docs(spark, sfDir)
+      val t = Tables.documents(spark, sfDir)
         .withColumn("toks", expr("regexp_extract_all(text, '[a-z0-9]+', 0)"))
       val b = t.select(col("doc_id"), explode(expr(gramsExpr(2))).as("bg"))
       val a = b.groupBy("doc_id", "bg").agg(count(lit(1)).as("n"))
@@ -177,7 +174,7 @@ object TrainPrepOps {
          |       CASE WHEN n_tokens > $SeqBudget THEN CAST(0 AS BIGINT)
          |            ELSE cum // $SeqBudget + 1 END AS seq
          |FROM w ORDER BY doc_id""".stripMargin) { (spark, sfDir) =>
-      val sizes = docs(spark, sfDir)
+      val sizes = Tables.documents(spark, sfDir)
         .select(
           // zero-padded key: string range-partitioning must agree with
           // numeric doc_id order; %019d covers any non-negative long
@@ -216,7 +213,7 @@ object TrainPrepOps {
          |       CAST(CASE WHEN seq = 0 THEN 0
          |            ELSE sum(n_tokens) * 1000000 // $SeqBudget END AS BIGINT) AS fill_ppm
          |FROM pk GROUP BY seq ORDER BY seq""".stripMargin) { (spark, sfDir) =>
-      val sizes = docs(spark, sfDir)
+      val sizes = Tables.documents(spark, sfDir)
         .select(format_string("%019d", col("doc_id")).as("path"),
           size(expr("regexp_extract_all(text, '[a-z0-9]+', 0)")).cast("long").as("size"))
       PackingOps.nextFitDist(spark, sizes, capacity = SeqBudget)
@@ -264,7 +261,7 @@ object TrainPrepOps {
            |  transform(sequence(1, (size(toks) + ${PassageLen - 1}) div $PassageLen),
            |    i -> array_join(slice(toks, (i - 1) * $PassageLen + 1, $PassageLen), ' '))
            |ELSE CAST(array() AS array<string>) END""".stripMargin
-      val p = docs(spark, sfDir)
+      val p = Tables.documents(spark, sfDir)
         .withColumn("toks", expr("regexp_extract_all(text, '[a-z0-9]+', 0)"))
         .select(col("doc_id"), posexplode(expr(passagesExpr)).as(Seq("pos0", "passage")))
         .select(col("doc_id"), (col("pos0") + 1).as("pos"), col("passage"),
@@ -341,7 +338,7 @@ object TrainPrepOps {
         |       n_tokens * 1000000 // tot AS w_prop_ppm,
         |       sq * 1000000 // tots AS w_sqrt_ppm
         |FROM q, t ORDER BY source""".stripMargin) { (spark, sfDir) =>
-      val s = docs(spark, sfDir)
+      val s = Tables.documents(spark, sfDir)
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"),
           sum(size(expr("regexp_extract_all(text, '[a-z0-9]+', 0)")).cast("long"))
@@ -383,7 +380,7 @@ object TrainPrepOps {
          |FROM r, tau WHERE rnk <= 50 ORDER BY rnk""".stripMargin) { (spark, sfDir) =>
       val u = graft.functions.PortableHash.minhashPerm(
         graft.functions.PortableHash.h8(lpad(col("doc_id").cast("string"), 8, "0")), 10)
-      val q = docs(spark, sfDir)
+      val q = Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("n_chars").as("w"), u.as("u"))
         .select(col("doc_id"), col("w"), expr("(w * 1000000) DIV (u + 1)").as("q"))
       // top-(k+1) by priority: TakeOrderedAndProject, then rank the tiny
@@ -442,7 +439,7 @@ object TrainPrepOps {
         |       CAST(coalesce(sel.kept_sum, 0) AS BIGINT) AS kept_sum
         |FROM k LEFT JOIN sel ON sel.source = k.source
         |ORDER BY k.source""".stripMargin) { (spark, sfDir) =>
-      val s = docs(spark, sfDir).groupBy("source").agg(count(lit(1)).as("n_avail"))
+      val s = Tables.documents(spark, sfDir).groupBy("source").agg(count(lit(1)).as("n_avail"))
         .withColumn("w", floor(sqrt(col("n_avail").cast("double"))).cast("long"))
       val tw = s.agg(sum("w").as("tot"))
       val p = s.crossJoin(broadcast(tw))
@@ -452,7 +449,7 @@ object TrainPrepOps {
       val k = p.crossJoin(broadcast(cap))
         .select(col("source"), col("n_avail"), col("w_ppm"),
           expr("t * w_ppm DIV 1000000").as("keep_n"))
-      val r = docs(spark, sfDir)
+      val r = Tables.documents(spark, sfDir)
         .select(col("source"), col("doc_id"),
           md5(col("doc_id").cast("string").cast("binary")).as("h"))
         .withColumn("rnk", row_number().over(
@@ -479,7 +476,7 @@ object TrainPrepOps {
         |       CAST(row_number() OVER (ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id)
         |            AS BIGINT) AS pos
         |FROM documents ORDER BY doc_id""".stripMargin) { (spark, sfDir) =>
-      val keyed = docs(spark, sfDir)
+      val keyed = Tables.documents(spark, sfDir)
         .select(col("doc_id"),
           md5(col("doc_id").cast("string").cast("binary")).as("k"))
       Prefix.scan(keyed, "pos", Seq(col("k"), col("doc_id")), lit(1L), Prefix.Sum)
@@ -529,7 +526,7 @@ object TrainPrepOps {
       // the corpus-count agg (both inside the aff broadcast build) and
       // the corpus scoring scan — unpersisted, the regexp tokenization
       // would run three times over the documents table
-      val bg = docs(spark, sfDir)
+      val bg = Tables.documents(spark, sfDir)
         .withColumn("toks", expr("regexp_extract_all(text, '[a-z0-9]+', 0)"))
         .select(col("doc_id"), explode(expr(gramsExpr(2))).as("bg"))
         .transform(graft.CacheTracker.persist)
@@ -582,7 +579,7 @@ object TrainPrepOps {
         |  CAST(length(substring(text, CAST(1 + k * 150 AS INT), 200)) AS BIGINT) AS chunk_len,
         |  md5(substring(text, CAST(1 + k * 150 AS INT), 200)) AS chunk_md5
         |FROM c ORDER BY doc_id, chunk_id""".stripMargin) { (spark, sfDir) =>
-      docs(spark, sfDir)
+      Tables.documents(spark, sfDir)
         .selectExpr("doc_id", "text", "length(text) AS len")
         .selectExpr("doc_id", "text",
           "CASE WHEN len <= 200 THEN 1 ELSE ((len - 200 + 149) DIV 150) + 1 END AS n_chunks")

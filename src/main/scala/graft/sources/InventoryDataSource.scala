@@ -11,7 +11,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Tabl
 import org.apache.spark.sql.connector.expressions.{Expression => VExpression, NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, Max, Min, Sum}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset => StreamingOffset, ReadAllAvailable, ReadLimit, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset => StreamingOffset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Not, StringStartsWith}
 import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructType}
@@ -120,15 +120,6 @@ object InventoryDataSource {
     * row count). Test hook only; one JVM in local mode. */
   val dirsListed = new AtomicLong(0L)
 
-  /** directories listed by DRIVER-LOCAL offset walks (the streaming
-    * source's non-distributed watermark paths). With
-    * `.option("distributedOffsets", true)` this must stay 0 for an entire
-    * drain — bounded or not — because the driver then lists nothing but
-    * the root during partition planning; the spec pins that O(1) contract
-    * (the shared `dirsListed` counter can't, since executor walks land in
-    * the same JVM under local mode). Test hook only. */
-  val driverWalkDirs = new AtomicLong(0L)
-
   /** rows actually handed to Spark across all readers — the observable the
     * AGGREGATE-pushdown spec pins: with a pushed group-by, the source
     * emits one partial row per (partition, group), never one per file.
@@ -196,7 +187,6 @@ private final class InventoryTable(root: String, hadoopConf: Map[String, String]
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new InventoryScanBuilder(root, hadoopConf,
       Option(options.get("maxFilesPerTrigger")).map(_.toInt),
-      options.getBoolean("distributedOffsets", false),
       options.getInt("minPartitions", 1),
       options.getBoolean("admitFilesOnly", false))
 
@@ -332,7 +322,7 @@ private final class InventoryWriter(root: String, hadoopConf: Map[String, String
 }
 
 private final class InventoryScanBuilder(root: String, hadoopConf: Map[String, String],
-    maxFilesPerTrigger: Option[Int] = None, distributedOffsets: Boolean = false,
+    maxFilesPerTrigger: Option[Int] = None,
     minPartitions: Int = 1, admitFilesOnly: Boolean = false)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates {
@@ -423,14 +413,13 @@ private final class InventoryScanBuilder(root: String, hadoopConf: Map[String, S
 
   override def build(): Scan =
     InventoryScan(root, hadoopConf, pushed, agg.map(_.schema).getOrElse(required), agg,
-      maxFilesPerTrigger, distributedOffsets, minPartitions, admitFilesOnly)
+      maxFilesPerTrigger, minPartitions, admitFilesOnly)
 }
 
 private final case class InventoryScan(root: String, hadoopConf: Map[String, String],
     pushed: Array[Filter], required: StructType,
     agg: Option[InventoryDataSource.PushedAgg],
     maxFilesPerTrigger: Option[Int] = None,
-    distributedOffsets: Boolean = false,
     minPartitions: Int = 1,
     admitFilesOnly: Boolean = false) extends Scan with Batch
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
@@ -558,7 +547,7 @@ private final case class InventoryScan(root: String, hadoopConf: Map[String, Str
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
     require(agg.isEmpty, "aggregate pushdown is a batch-only optimization")
     new InventoryMicroBatchStream(root, hadoopConf, pushed, required,
-      maxFilesPerTrigger, distributedOffsets, minPartitions, admitFilesOnly)
+      maxFilesPerTrigger, minPartitions, admitFilesOnly)
   }
 }
 
@@ -571,38 +560,34 @@ private final case class InventoryOffset(ms: Long) extends StreamingOffset {
 /** Micro-batch streaming read of the inventory tree — the reference's
   * re-run migration ("skip what the last run already copied",
   * README.md:150-152) as a Structured Streaming SOURCE: each batch
-  * delivers exactly the entries whose mtime falls in (start, end] where
-  * `end` is the tree's current max mtime, and the watermark lives in the
-  * stream CHECKPOINT — so a daily `Trigger.AvailableNow` run syncs the
-  * delta and a continuous trigger tails the tree, with exactly-once
-  * delivery per entry. Readers are the SAME exact-filter walk as the
-  * batch scan, with the watermark range synthesized as two pushed
-  * mtime_ms filters (pruning and exactness come for free); pushed batch
-  * filters compose. Caveats of the mtime watermark, by design: an entry
-  * re-modified after delivery is delivered AGAIN with its new mtime
-  * (that is the sync semantics — changed files must recopy), and a
-  * writer backdating mtimes below the watermark is invisible (same
-  * contract as every listing-based incremental loader). Admission
-  * control (`SupportsAdmissionControl` + `SupportsTriggerAvailableNow`,
+  * delivers exactly the entries whose mtime falls in (start, end], and
+  * the watermark lives in the stream CHECKPOINT — so a daily
+  * `Trigger.AvailableNow` run syncs the delta and a continuous trigger
+  * tails the tree, with exactly-once delivery per entry. Readers are the
+  * SAME exact-filter walk as the batch scan, with the watermark range
+  * synthesized as two pushed mtime_ms filters (pruning and exactness come
+  * for free); pushed batch filters compose. Caveats of the mtime
+  * watermark, by design: an entry re-modified after delivery is delivered
+  * AGAIN with its new mtime (that is the sync semantics — changed files
+  * must recopy), and a writer backdating mtimes below the watermark is
+  * invisible (same contract as every listing-based incremental loader).
+  *
+  * Every end watermark comes from ONE distributed fold, [[nextOffset]]:
+  * the offset walk fans out over the same subtree groups as the batch
+  * scan, so the driver lists only the levels partition planning splits,
+  * once per batch, regardless of backlog depth. Unbounded, the end is the
+  * largest entry mtime past the start. Admission control
+  * (`SupportsAdmissionControl` + `SupportsTriggerAvailableNow`,
   * `.option("maxFilesPerTrigger", n)`) drains a backlog in bounded
   * micro-batches — a billion-file backlog must never be one batch — by
-  * setting each batch's end watermark to the n-th smallest entry mtime
-  * past the start (one bounded-heap walk; mtime TIES are all admitted,
-  * so a timestamp is never split across batches; the bound counts
-  * ENTRIES — folder rows are data rows of this source — unless
-  * `.option("admitFilesOnly", true)` restricts the budget to file rows,
-  * the right mode for folder-heavy namespaces). By default every
-  * `latestOffset` walks the tree on the driver — the listing cost every
-  * file stream source pays per batch. `.option("distributedOffsets",
-  * true)` is the billion-file shape for BOTH offset paths: the unlimited
-  * watermark rides the batch aggregate pushdown (max(mtime_ms) folded
-  * into the walk, one partial row per subtree), and the bounded path
-  * fans the top-n-mtime walk out across subtrees and merges the ≤ n
-  * heads per subtree on the driver — the driver lists only the root,
-  * once per batch, regardless of backlog depth. */
+  * ending each batch at the n-th smallest entry mtime past the start;
+  * mtime TIES are all admitted, so a timestamp is never split across
+  * batches, and the bound counts ENTRIES — folder rows are data rows of
+  * this source — unless `.option("admitFilesOnly", true)` restricts the
+  * budget to file rows, the right mode for folder-heavy namespaces. */
 private final class InventoryMicroBatchStream(root: String,
     hadoopConf: Map[String, String], pushed: Array[Filter], required: StructType,
-    maxFilesPerTrigger: Option[Int] = None, distributedOffsets: Boolean = false,
+    maxFilesPerTrigger: Option[Int] = None,
     minPartitions: Int = 1, admitFilesOnly: Boolean = false)
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
@@ -615,50 +600,14 @@ private final class InventoryMicroBatchStream(root: String,
   private var availableNowEnd: Option[Long] = None
 
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowEnd = Some(walkMaxMtime())
+    availableNowEnd = Some(nextOffset(Long.MinValue, None))
 
   private def capped(off: Long): StreamingOffset =
     InventoryOffset(availableNowEnd.fold(off)(math.min(off, _)))
 
-  private def fsAndRoot: (FileSystem, Path) = InventoryScan.fsAndRoot(root, hadoopConf)
-
   override def initialOffset(): StreamingOffset = InventoryOffset(Long.MinValue)
 
-  /** the next watermark = max mtime in the tree. Default: one driver
-    * walk (the listing cost every file stream source pays per batch).
-    * `.option("distributedOffsets", true)`: the SAME answer as a tiny
-    * batch job over this source riding the AGGREGATE pushdown — the
-    * global max(mtime_ms) folds into the walk, so one partial row per
-    * subtree-partition crosses the wire and the listing fans out across
-    * the cluster. That is the billion-file shape: the driver never
-    * lists anything but the root. */
-  private def walkMaxMtime(): Long =
-    if (distributedOffsets) {
-      val spark = org.apache.spark.sql.SparkSession.active
-      val reader = hadoopConf.foldLeft(
-        spark.read.format("graft-inventory").option("root", root)) {
-        case (r, (k, v)) => r.option("hadoop." + k, v)
-      }
-      val row = reader.load()
-        .agg(org.apache.spark.sql.functions.max("mtime_ms")).collect()(0)
-      if (row.isNullAt(0)) Long.MinValue else row.getLong(0)
-    } else {
-      val (fs, rootPath) = fsAndRoot
-      var mx = Long.MinValue
-      val stack = scala.collection.mutable.Stack[Path](rootPath)
-      while (stack.nonEmpty) {
-        val d = stack.pop()
-        InventoryDataSource.dirsListed.incrementAndGet()
-        InventoryDataSource.driverWalkDirs.incrementAndGet()
-        fs.listStatus(d).foreach { st =>
-          mx = math.max(mx, st.getModificationTime)
-          if (st.isDirectory) stack.push(st.getPath)
-        }
-      }
-      mx
-    }
-
-  override def latestOffset(): StreamingOffset = capped(walkMaxMtime())
+  override def latestOffset(): StreamingOffset = capped(nextOffset(Long.MinValue, None))
 
   // ---- admission control: bounded sync batches ----------------------
   // A billion-file backlog must not be one micro-batch: with
@@ -676,17 +625,16 @@ private final class InventoryMicroBatchStream(root: String,
   override def getDefaultReadLimit: ReadLimit =
     maxFilesPerTrigger.map(ReadLimit.maxFiles).getOrElse(ReadLimit.allAvailable())
 
-  override def latestOffset(start: StreamingOffset, limit: ReadLimit): StreamingOffset = {
-    val s = start.asInstanceOf[InventoryOffset].ms
-    limit match {
-      case mf: ReadMaxFiles => capped(boundedNextOffset(s, mf.maxFiles()))
-      case _: ReadAllAvailable => latestOffset()
-      case _ => latestOffset()
-    }
-  }
+  override def latestOffset(start: StreamingOffset, limit: ReadLimit): StreamingOffset =
+    capped(nextOffset(start.asInstanceOf[InventoryOffset].ms, limit match {
+      case mf: ReadMaxFiles => Some(mf.maxFiles())
+      case _ => None
+    }))
 
-  /** one bounded batch's end watermark: the n-th smallest entry mtime past
-    * `start` (or `start` unchanged if nothing is newer — no progress).
+  /** the end watermark of the batch after `start` (or `start` unchanged if
+    * nothing is newer — no progress). Unbounded: the largest entry mtime
+    * past `start`. With a bound n: the n-th smallest admissible entry
+    * mtime past `start`, or the largest one when fewer than n remain.
     *
     * `admitFilesOnly=true` counts only FILE rows toward n — what the
     * option name promises on a folder-heavy namespace. Folder rows whose
@@ -698,110 +646,78 @@ private final class InventoryMicroBatchStream(root: String,
     * AvailableNow drain always terminates. Tie rule unchanged: all FILES
     * sharing the boundary mtime are admitted, a timestamp is never split.
     *
-    * NOTE on composition with pushed batch filters: BOTH offset paths
-    * admit by entries past the watermark, deliberately ignoring the
-    * query's pushed filters — a heavily-filtered stream can admit batches
-    * that deliver few rows. The two paths agree (no divergence), and the
-    * recurrence oracle pins the behavior; filter-aware admission would
-    * make the watermark sequence depend on the query shape, so a restart
-    * with a different projection would re-slice history.
+    * NOTE on composition with pushed batch filters: admission counts
+    * entries past the watermark, deliberately ignoring the query's pushed
+    * filters — a heavily-filtered stream can admit batches that deliver
+    * few rows. The recurrence oracle pins the behavior; filter-aware
+    * admission would make the watermark sequence depend on the query
+    * shape, so a restart with a different projection would re-slice
+    * history.
     *
-    * Default: one driver bounded-heap walk — the same per-batch listing
-    * cost as the unlimited driver path. `distributedOffsets=true`: the
-    * walk FANS OUT like the batch scan (one task per top-level subtree,
-    * driver lists only the root), each task folds its subtree into a
-    * bounded heap of its n smallest past-watermark mtimes, and partial
-    * merges bound every step at n. This is the billion-file-backlog
-    * configuration: without it, maxFilesPerTrigger would pay a full
-    * driver listing once per micro-batch × batches-in-backlog — the
-    * exact scale the option exists for. */
-  private def boundedNextOffset(s: Long, n: Int): Long =
-    if (distributedOffsets) {
-      val spark = org.apache.spark.sql.SparkSession.active
-      val groups = InventoryScan(root, hadoopConf, Array.empty,
-        InventoryDataSource.Schema, None, minPartitions = minPartitions)
-        .planInputPartitions().map(_.asInstanceOf[InventoryPartitionGroup]).toSeq
-      if (groups.isEmpty) return s
-      val r = root; val hc = hadoopConf; val filesOnly = admitFilesOnly
-      // Each task emits (its subtree group's n smallest past-watermark
-      // admissible mtimes SORTED, max past-watermark entry mtime); partial
-      // merges (treeReduce) combine two sorted heads into the n smallest
-      // of their union, so every merge — and the single array reaching
-      // the driver — is bounded by n, never by n × subtree-count (with
-      // 10^5 files/trigger over 10^3 subtrees a flat collect would buffer
-      // 10^8 longs on the driver; the tree merge caps it at n per step
-      // regardless of fan-out).
-      val (merged, maxEntry) = spark.sparkContext
-        .parallelize(groups, math.max(1, groups.size))
-        .map { group =>
-          // the mtime cut rides the same exact pushdown machinery as the
-          // batch readers; admissible entries past the watermark feed the
-          // bounded heap exactly like the driver walk
-          val heap = new java.util.PriorityQueue[java.lang.Long](
-            math.max(1, n), java.util.Comparator.reverseOrder[java.lang.Long]())
-          var mx = Long.MinValue
-          val (fs, rootPath) = InventoryScan.fsAndRoot(r, hc)
-          group.parts.foreach { part =>
-            val walk = new InventoryWalk(fs, rootPath,
-              Array[Filter](GreaterThan("mtime_ms", java.lang.Long.valueOf(s))), part)
-            var e = walk.nextEntry()
-            while (e.isDefined) {
-              val m = e.get.mtime
-              mx = math.max(mx, m)
-              if ((!filesOnly || !e.get.isFolder) && (heap.size < n || m < heap.peek())) {
-                heap.add(m)
-                if (heap.size > n) heap.poll()
-              }
-              e = walk.nextEntry()
-            }
-          }
-          val a = heap.asScala.toArray.map(_.longValue)
-          java.util.Arrays.sort(a)
-          (a, mx)
-        }.treeReduce { (x, y) =>
-          val out = new Array[Long](math.min(n, x._1.length + y._1.length))
-          var i = 0; var j = 0; var k = 0
-          while (k < out.length) {
-            if (j >= y._1.length || (i < x._1.length && x._1(i) <= y._1(j))) {
-              out(k) = x._1(i); i += 1
-            } else { out(k) = y._1(j); j += 1 }
-            k += 1
-          }
-          (out, math.max(x._2, y._2))
-        }
-      // merged = the global n smallest admissible (sorted); the boundary
-      // is the n-th smallest, the largest available when fewer than n
-      // remain, or — files-only with a folder-only tail — the flush point
-      if (merged.nonEmpty) merged.last
-      else if (maxEntry > s) maxEntry
-      else s
-    } else {
-      val (fs, rootPath) = fsAndRoot
-      val heap = new java.util.PriorityQueue[java.lang.Long](
-        math.max(1, n), java.util.Comparator.reverseOrder[java.lang.Long]())
-      var maxEntry = Long.MinValue
-      val stack = scala.collection.mutable.Stack[Path](rootPath)
-      while (stack.nonEmpty) {
-        val d = stack.pop()
-        InventoryDataSource.dirsListed.incrementAndGet()
-        InventoryDataSource.driverWalkDirs.incrementAndGet()
-        fs.listStatus(d).foreach { st =>
-          val m = st.getModificationTime
-          if (m > s) {
-            maxEntry = math.max(maxEntry, m)
-            if ((!admitFilesOnly || !st.isDirectory) &&
-                (heap.size < n || m < heap.peek())) {
+    * The walk FANS OUT like the batch scan (the same subtree groups,
+    * minPartitions split included): each task walks its group past the
+    * watermark, keeps its n smallest admissible mtimes in a bounded heap
+    * and its largest entry mtime, and partial merges bound every step at
+    * n. Without the fan-out, maxFilesPerTrigger would pay a full driver
+    * listing once per micro-batch × batches-in-backlog — the exact scale
+    * the option exists for. */
+  private def nextOffset(start: Long, bound: Option[Int]): Long = {
+    val groups = InventoryScan(root, hadoopConf, Array.empty,
+      InventoryDataSource.Schema, None, minPartitions = minPartitions)
+      .planInputPartitions().map(_.asInstanceOf[InventoryPartitionGroup]).toSeq
+    val r = root; val hc = hadoopConf; val filesOnly = admitFilesOnly
+    val n = bound.getOrElse(0)
+    // Each task emits (its subtree group's n smallest past-watermark
+    // admissible mtimes SORTED, max past-watermark entry mtime); partial
+    // merges (treeReduce) combine two sorted heads into the n smallest
+    // of their union, so every merge — and the single array reaching
+    // the driver — is bounded by n, never by n × subtree-count (with
+    // 10^5 files/trigger over 10^3 subtrees a flat collect would buffer
+    // 10^8 longs on the driver; the tree merge caps it at n per step
+    // regardless of fan-out).
+    val (heads, maxEntry) = org.apache.spark.sql.SparkSession.active.sparkContext
+      .parallelize(groups, groups.size)
+      .map { group =>
+        // the mtime cut rides the same exact pushdown machinery as the
+        // batch readers
+        val heap = new java.util.PriorityQueue[java.lang.Long](
+          math.max(1, n), java.util.Comparator.reverseOrder[java.lang.Long]())
+        var mx = Long.MinValue
+        val (fs, rootPath) = InventoryScan.fsAndRoot(r, hc)
+        group.parts.foreach { part =>
+          val walk = new InventoryWalk(fs, rootPath,
+            Array[Filter](GreaterThan("mtime_ms", java.lang.Long.valueOf(start))), part)
+          var e = walk.nextEntry()
+          while (e.isDefined) {
+            val m = e.get.mtime
+            mx = math.max(mx, m)
+            if (n > 0 && (!filesOnly || !e.get.isFolder) && (heap.size < n || m < heap.peek())) {
               heap.add(m)
               if (heap.size > n) heap.poll()
             }
+            e = walk.nextEntry()
           }
-          if (st.isDirectory) stack.push(st.getPath)
         }
+        val a = heap.asScala.toArray.map(_.longValue)
+        java.util.Arrays.sort(a)
+        (a, mx)
+      }.treeReduce { (x, y) =>
+        val out = new Array[Long](math.min(n, x._1.length + y._1.length))
+        var i = 0; var j = 0; var k = 0
+        while (k < out.length) {
+          if (j >= y._1.length || (i < x._1.length && x._1(i) <= y._1(j))) {
+            out(k) = x._1(i); i += 1
+          } else { out(k) = y._1(j); j += 1 }
+          k += 1
+        }
+        (out, math.max(x._2, y._2))
       }
-      if (!heap.isEmpty) heap.peek()
-      else if (maxEntry > s) maxEntry
-      else s
-    }
+    // heads = the global n smallest admissible (sorted); the boundary is
+    // the n-th smallest, the largest available when fewer than n remain,
+    // or — unbounded, or files-only with a folder-only tail — the largest
+    // entry past the start (maxEntry is > start whenever it is set)
+    if (heads.nonEmpty) heads.last else math.max(maxEntry, start)
+  }
 
   override def planInputPartitions(start: StreamingOffset,
       end: StreamingOffset): Array[InputPartition] = {

@@ -208,29 +208,16 @@ class CopyExecutorSpec extends AnyFunSuite with CacheDrained {
 
   test("copyInventory job budget: one job per depth level plus two (fan-out, files)") {
     val spark = TestSpark.spark
-    val sc = spark.sparkContext
     val srcOps = new HadoopFileOps(s"file://${Files.createTempDirectory("graft-jobs-src")}")
     val ops = new HadoopFileOps(s"file://${Files.createTempDirectory("graft-jobs-dst")}")
     val inv = treeWithFiles(srcOps)
-    val group = "graft-copy-job-budget"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "copyInventory job budget")
-    try CopyExecutor.copyInventory(spark, inv, ops, parallelism = 3, source = Some(srcOps))
-    finally {
-      sc.clearJobGroup()
-      org.apache.spark.ListenerBusDrain(sc)
-      sc.removeSparkListener(listener)
+    val (_, jobs) = TestSpark.jobsDuring("graft-copy-job-budget") {
+      CopyExecutor.copyInventory(spark, inv, ops, parallelism = 3, source = Some(srcOps))
     }
     // at least one job per level: the per-level barrier stays
     val levels = 4
-    assert(jobs.get() >= levels && jobs.get() <= levels + 2,
-      s"copyInventory started ${jobs.get()} jobs")
+    assert(jobs >= levels && jobs <= levels + 2,
+      s"copyInventory started $jobs jobs")
   }
 
   test("per-item failures are quarantined, not fatal (op 34)") {

@@ -7,15 +7,15 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Randomized (fixed-seed) differential test of the inventory stream's
-  * ADMISSION CONTROL against a reference replay of the watermark
-  * recurrence: for random trees with deliberately colliding mtimes and
-  * random maxFilesPerTrigger bounds, driver-walk and distributed offset
-  * modes must both produce EXACTLY the batch sequence the recurrence
-  * defines — batch k's end watermark is the n-th smallest entry mtime
-  * past batch k-1's (counting multiplicity, ties all admitted), every
-  * entry in exactly the batch its mtime falls in. A split timestamp, a
-  * dropped tie, a folder counted wrong, or a distributed merge that
-  * disagrees with the driver heap all fail with the offending batch.
+  * offsets against a reference replay of the watermark recurrence: for
+  * random trees with deliberately colliding mtimes and random
+  * maxFilesPerTrigger bounds, the distributed offset fold must produce
+  * EXACTLY the batch sequence the recurrence defines — batch k's end
+  * watermark is the n-th smallest entry mtime past batch k-1's (counting
+  * multiplicity, ties all admitted), every entry in exactly the batch its
+  * mtime falls in; with no bound the whole tree is one batch. A split
+  * timestamp, a dropped tie, a folder counted wrong, or a per-subtree
+  * merge that loses a head all fail with the offending batch.
   *
   * `admitFilesOnly=true` gets its own recurrence: only FILE rows consume
   * the per-batch budget (folders ride whatever window the files define),
@@ -58,9 +58,9 @@ class InventoryStreamPropertySpec extends AnyFunSuite {
 
   /** the recurrence: batches of entries, each ended at the n-th smallest
     * ADMISSIBLE mtime past the previous watermark (admissible = every
-    * entry, or files only), ties all admitted; a tail with no admissible
-    * entry left flushes in one final batch */
-  private def replay(entries: Seq[(String, Long, Boolean)], n: Int,
+    * entry, or files only; no bound = the largest), ties all admitted; a
+    * tail with no admissible entry left flushes in one final batch */
+  private def replay(entries: Seq[(String, Long, Boolean)], n: Option[Int],
       filesOnly: Boolean): Seq[Set[String]] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[Set[String]]
     var w = Long.MinValue
@@ -70,7 +70,7 @@ class InventoryStreamPropertySpec extends AnyFunSuite {
       if (past.isEmpty) return out.toSeq
       val admissible = past.filter(e => !filesOnly || !e._3).map(_._2).sorted
       val end =
-        if (admissible.nonEmpty) admissible(math.min(n, admissible.size) - 1)
+        if (admissible.nonEmpty) admissible.take(n.getOrElse(admissible.size)).last
         else past.map(_._2).max // folder-only tail: one flush batch
       out += past.filter(_._2 <= end).map(_._1).toSet
       w = end
@@ -79,14 +79,13 @@ class InventoryStreamPropertySpec extends AnyFunSuite {
     out.toSeq
   }
 
-  private def drainBatches(root: String, n: Int, distributed: Boolean,
-      filesOnly: Boolean, minParts: Int = 1): Seq[Set[String]] = {
+  private def drainBatches(root: String, n: Option[Int], filesOnly: Boolean,
+      minParts: Int = 1): Seq[Set[String]] = {
     val spark = TestSpark.spark
     val ckpt = Files.createTempDirectory("graft-sprop-ckpt").toString
     val out = Files.createTempDirectory("graft-sprop-out").toString + "/rows"
-    val q = spark.readStream.format("graft-inventory").option("root", root)
-      .option("maxFilesPerTrigger", n.toString)
-      .option("distributedOffsets", distributed.toString)
+    val reader = spark.readStream.format("graft-inventory").option("root", root)
+    val q = n.fold(reader)(b => reader.option("maxFilesPerTrigger", b.toString))
       .option("admitFilesOnly", filesOnly.toString)
       .option("minPartitions", minParts.toString).load()
       .select("name") // prune: local trees must not materialize ownership
@@ -103,7 +102,7 @@ class InventoryStreamPropertySpec extends AnyFunSuite {
       .map(_._2.map(_._2).toSet)
   }
 
-  test("random trees × random bounds × both offset modes reproduce the watermark recurrence exactly") {
+  test("random trees × random bounds reproduce the watermark recurrence exactly") {
     val rnd = new scala.util.Random(815L)
     (1 to 6).foreach { tree =>
       val (root, entries) = buildTree(rnd)
@@ -111,11 +110,12 @@ class InventoryStreamPropertySpec extends AnyFunSuite {
       // a random fan-out floor: the level-synchronous split must never
       // change WHAT a batch delivers, only how it fans out
       val mp = Seq(1, 2, 7)(rnd.nextInt(3))
-      val expect = replay(entries, n, filesOnly = false)
-      Seq(false, true).foreach { distributed =>
-        val got = drainBatches(root, n, distributed, filesOnly = false, minParts = mp)
+      Seq(Some(n), None).foreach { bound =>
+        val expect = replay(entries, bound, filesOnly = false)
+        if (bound.isEmpty) assert(expect.size == 1, s"tree=$tree: unbounded replay = $expect")
+        val got = drainBatches(root, bound, filesOnly = false, minParts = mp)
         assert(got == expect,
-          s"tree=$tree n=$n distributed=$distributed minParts=$mp\nexpect=$expect\ngot=$got")
+          s"tree=$tree bound=$bound minParts=$mp\nexpect=$expect\ngot=$got")
       }
     }
   }
@@ -140,41 +140,36 @@ class InventoryStreamPropertySpec extends AnyFunSuite {
     Files.setLastModifiedTime(Paths.get(root), FileTime.fromMillis(0L))
     val entries = Seq(("/d0/a.dat", 1000L, false), ("/d0/b.dat", 2000L, false),
       ("/d1/c.dat", 3000L, false), ("/d0", 9000L, true), ("/d1", 8000L, true))
-    val expect = replay(entries, 1, filesOnly = true)
-    Seq(false, true).foreach { distributed =>
-      val got = drainBatches(root, 1, distributed, filesOnly = true)
-      assert(got == expect, s"distributed=$distributed\nexpect=$expect\ngot=$got")
-      // the folder tail must be ONE batch, after the three 1-file batches
-      assert(got.length == 4 && got.last == Set("/d0", "/d1"),
-        s"folder-only tail not flushed as one final batch: $got")
-    }
+    val expect = replay(entries, Some(1), filesOnly = true)
+    val got = drainBatches(root, Some(1), filesOnly = true)
+    assert(got == expect, s"expect=$expect\ngot=$got")
+    // the folder tail must be ONE batch, after the three 1-file batches
+    assert(got.length == 4 && got.last == Set("/d0", "/d1"),
+      s"folder-only tail not flushed as one final batch: $got")
   }
 
-  test("admitFilesOnly: folder-interleaved trees bound FILES per batch in both offset modes") {
+  test("admitFilesOnly: folder-interleaved trees bound FILES per batch") {
     val rnd = new scala.util.Random(1107L)
     (1 to 6).foreach { tree =>
       val (root, entries) = buildTree(rnd)
       val n = Seq(1, 2, 3, 5)(rnd.nextInt(4))
-      val expect = replay(entries, n, filesOnly = true)
+      val expect = replay(entries, Some(n), filesOnly = true)
       val isFile = entries.collect { case (rel, _, false) => rel }.toSet
-      Seq(false, true).foreach { distributed =>
-        val got = drainBatches(root, n, distributed, filesOnly = true)
-        assert(got == expect,
-          s"tree=$tree n=$n distributed=$distributed\nexpect=$expect\ngot=$got")
-        // the per-batch FILE bound (ties may exceed n, so bound by n plus
-        // the largest same-mtime file tie group — conservatively, files
-        // with the batch's max mtime)
-        got.zipWithIndex.foreach { case (batch, i) =>
-          val files = batch.intersect(isFile)
-          val byMt = files.toSeq.map(f => entries.find(_._1 == f).get._2)
-          if (byMt.nonEmpty) {
-            val boundary = byMt.max
-            val nonTies = byMt.count(_ < boundary)
-            assert(nonTies < n,
-              s"tree=$tree batch=$i distributed=$distributed: " +
-                s"${files.size} files admitted with $nonTies strictly inside " +
-                s"the boundary — budget n=$n violated beyond the tie rule")
-          }
+      val got = drainBatches(root, Some(n), filesOnly = true)
+      assert(got == expect, s"tree=$tree n=$n\nexpect=$expect\ngot=$got")
+      // the per-batch FILE bound (ties may exceed n, so bound by n plus
+      // the largest same-mtime file tie group — conservatively, files
+      // with the batch's max mtime)
+      got.zipWithIndex.foreach { case (batch, i) =>
+        val files = batch.intersect(isFile)
+        val byMt = files.toSeq.map(f => entries.find(_._1 == f).get._2)
+        if (byMt.nonEmpty) {
+          val boundary = byMt.max
+          val nonTies = byMt.count(_ < boundary)
+          assert(nonTies < n,
+            s"tree=$tree batch=$i: " +
+              s"${files.size} files admitted with $nonTies strictly inside " +
+              s"the boundary — budget n=$n violated beyond the tie rule")
         }
       }
     }

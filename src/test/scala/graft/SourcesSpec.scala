@@ -502,15 +502,13 @@ class SourcesSpec extends AnyFunSuite {
     assert(nonEmpty.forall(_ <= 2L), s"a batch exceeded maxFilesPerTrigger: $sizes")
   }
 
-  test("graft-inventory DSv2: bounded drain with distributedOffsets never full-walks on the driver") {
-    // the billion-file-backlog configuration: maxFilesPerTrigger +
-    // distributedOffsets must fan the per-batch top-n-mtime walk out
-    // across subtree tasks — the driver lists only the root during
-    // partition planning, for EVERY batch of the drain. driverWalkDirs
-    // counts only driver-local offset walks (executor walks share the
-    // JVM in local mode, so dirsListed can't pin this).
+  test("graft-inventory DSv2: bounded drain over a minPartitions split folds offsets exactly once") {
+    // the billion-file-backlog configuration: maxFilesPerTrigger over a
+    // split plan — each batch's top-n-mtime offset fold runs in four
+    // subtree-group tasks (own files of /, /a and /b, plus /a/sub) whose
+    // heads merge by tree reduce; delivery must stay exactly-once and
+    // every batch within the bound
     val spark = TestSpark.spark
-    import graft.sources.InventoryDataSource
     val tmp = buildTree()
     Seq("a/x.dat" -> 10L, "a/y.dat" -> 20L, "a/sub/z.dat" -> 30L,
       "b/w.dat" -> 40L, "top.dat" -> 50L).foreach { case (rel, s) =>
@@ -520,41 +518,27 @@ class SourcesSpec extends AnyFunSuite {
     Seq("", "/a", "/a/sub", "/b").foreach(d =>
       Files.setLastModifiedTime(Paths.get(s"$tmp$d"),
         java.nio.file.attribute.FileTime.fromMillis(0L)))
-    def drain(distributed: Boolean, tag: String): (Set[String], Seq[Long]) = {
-      val ckpt = Files.createTempDirectory(s"graft-inv-ckpt-$tag").toString
-      val out = Files.createTempDirectory(s"graft-inv-out-$tag").toString + "/rows"
-      val sizes = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val q = spark.readStream.format("graft-inventory").option("root", tmp)
-        .option("maxFilesPerTrigger", "2")
-        .option("distributedOffsets", distributed.toString).load()
-        .filter(!col("is_folder"))
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          sizes.synchronized { sizes += batch.count() }
-          batch.write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      (spark.read.parquet(out).collect().map(_.getString(0)).toSet, sizes.toSeq)
-    }
-    InventoryDataSource.driverWalkDirs.set(0L)
-    val (got, sizes) = drain(distributed = true, "dist-adm")
-    // same exactly-once bounded delivery as the driver-walk path...
+    val ckpt = Files.createTempDirectory("graft-inv-ckpt-split").toString
+    val out = Files.createTempDirectory("graft-inv-out-split").toString + "/rows"
+    val sizes = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val q = spark.readStream.format("graft-inventory").option("root", tmp)
+      .option("maxFilesPerTrigger", "2")
+      .option("minPartitions", "4").load()
+      .filter(!col("is_folder"))
+      .writeStream.outputMode("append")
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        sizes.synchronized { sizes += batch.count() }
+        batch.write.mode("append").parquet(out)
+      }
+      .option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    val got = spark.read.parquet(out).collect().map(_.getString(0)).toSet
     assert(got == Set("/a/x.dat", "/a/y.dat", "/a/sub/z.dat", "/b/w.dat", "/top.dat"),
-      s"distributed bounded drain lost or duplicated entries: $got")
+      s"split bounded drain lost or duplicated entries: $got")
     val nonEmpty = sizes.filter(_ > 0)
     assert(nonEmpty.size >= 3 && nonEmpty.forall(_ <= 2L),
-      s"distributed bounded drain batch shape drifted: $sizes")
-    // ...with ZERO driver-local listing across the whole multi-batch drain
-    assert(InventoryDataSource.driverWalkDirs.get() == 0L,
-      s"bounded distributed drain walked ${InventoryDataSource.driverWalkDirs.get()} dirs on the driver")
-    // differential: the counter is live — the default path does walk
-    InventoryDataSource.driverWalkDirs.set(0L)
-    val (got2, _) = drain(distributed = false, "drv-adm")
-    assert(got2 == got, s"driver-walk drain disagreed with distributed: $got2")
-    assert(InventoryDataSource.driverWalkDirs.get() > 0L,
-      "driverWalkDirs counter is dead — the default bounded path should use it")
+      s"split bounded drain batch shape drifted: $sizes")
   }
 
   test("graft-inventory DSv2: the admission bound counts entries — folder rows occupy interleaved mtime slots") {
@@ -601,7 +585,7 @@ class SourcesSpec extends AnyFunSuite {
     assert(batchOf("/b") == batchOf("/a/sub/z.dat"), s"folder /b missed its slice: $byBatch")
   }
 
-  test("graft-inventory DSv2: distributedOffsets computes the watermark via the pushed aggregate") {
+  test("graft-inventory DSv2: the offset fold sends no entry through a reader") {
     val spark = TestSpark.spark
     import graft.sources.InventoryDataSource
     val tmp = buildTree()
@@ -615,12 +599,11 @@ class SourcesSpec extends AnyFunSuite {
         java.nio.file.attribute.FileTime.fromMillis(0L)))
     val ckpt = Files.createTempDirectory("graft-inv-ckpt-dist").toString
     val out = Files.createTempDirectory("graft-inv-out-dist").toString + "/rows"
-    // the watermark job itself must ride the aggregate pushdown: the
-    // max(mtime_ms) batch job emits one partial row per subtree partition
-    // ("/" own files + /a + /b = 3), never one per file
+    // the watermark comes from the offset fold, which reduces each
+    // subtree group to its largest mtime inside the task: no offset
+    // computation may hand a single row to Spark
     InventoryDataSource.rowsEmitted.set(0L)
-    val q = spark.readStream.format("graft-inventory").option("root", tmp)
-      .option("distributedOffsets", "true").load()
+    val q = spark.readStream.format("graft-inventory").option("root", tmp).load()
       .filter(!col("is_folder"))
       .writeStream.outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
@@ -631,17 +614,12 @@ class SourcesSpec extends AnyFunSuite {
     q.awaitTermination()
     val got = spark.read.parquet(out).collect().map(_.getString(0)).toSet
     assert(got == Set("/a/x.dat", "/a/y.dat", "/a/sub/z.dat", "/b/w.dat", "/top.dat"),
-      s"distributed-offset drain drifted: $got")
+      s"unbounded drain drifted: $got")
     // the batch itself delivers all 8 tree entries (folders drop at the
-    // post-scan filter); every OFFSET job contributes exactly 3 partial
-    // rows (one per subtree partition: "/" own files + /a + /b) — the
-    // streaming engine runs the offset job several times (prepare, per
-    // batch, final no-more-data check), so the total must be
-    // 8 + 3·k for a small k. An unpushed offset job would emit 8 rows
-    // per run (8 + 8·k), which this modular check rejects.
+    // post-scan filter), and those are the only rows any reader emits —
+    // prepare, per-batch and final no-more-data offsets all fold in tasks
     val emitted = InventoryDataSource.rowsEmitted.get()
-    assert((emitted - 8) % 3 == 0 && emitted >= 11 && emitted <= 8 + 3 * 5,
-      s"offset job leaked row-level rows (want 8 + 3k, k<=5): $emitted")
+    assert(emitted == 8L, s"offset computation leaked rows through a reader: $emitted")
   }
 
   test("graft-inventory DSv2: pushed partial SUM surfaces Long overflow instead of wrapping") {

@@ -6,28 +6,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class TablesSpec extends AnyFunSuite {
 
-  /** Spark jobs started by `body` on this thread, counted by job group */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = TestSpark.spark.sparkContext
-    val group = "graft-tables-schema"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "Tables schema inference")
-    try {
-      val out = body
-      org.apache.spark.ListenerBusDrain(sc)
-      (out, jobs.get())
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   /** writes `df` as the single parquet file `dir/name.parquet` */
   private def writeTable(df: org.apache.spark.sql.DataFrame, dir: Path, name: String): Unit = {
     val out = Files.createTempDirectory("graft-tables-write")
@@ -40,16 +18,17 @@ class TablesSpec extends AnyFunSuite {
   test("a table's schema is inferred once while its file is unchanged; a rewrite re-infers it") {
     val spark = TestSpark.spark
     val dir = Files.createTempDirectory("graft-tables")
+    val group = "graft-tables-schema"
     writeTable(spark.range(10).toDF("a"), dir, "t")
-    val (first, firstJobs) = jobsDuring(Tables.table(spark, dir.toString, "t"))
+    val (first, firstJobs) = TestSpark.jobsDuring(group)(Tables.table(spark, dir.toString, "t"))
     assert(firstJobs >= 1, "the first read infers the schema in a Spark job")
-    val (second, secondJobs) = jobsDuring(Tables.table(spark, dir.toString, "t"))
+    val (second, secondJobs) = TestSpark.jobsDuring(group)(Tables.table(spark, dir.toString, "t"))
     assert(secondJobs == 0, s"a second read of an unchanged table started $secondJobs jobs")
     assert(second.schema == first.schema)
     assert(second.count() == 10L)
 
     writeTable(spark.range(5).selectExpr("id AS a", "CAST(id AS STRING) AS b"), dir, "t")
-    val (rewritten, rewrittenJobs) = jobsDuring(Tables.table(spark, dir.toString, "t"))
+    val (rewritten, rewrittenJobs) = TestSpark.jobsDuring(group)(Tables.table(spark, dir.toString, "t"))
     assert(rewrittenJobs >= 1, "a rewritten table is inferred again")
     assert(rewritten.columns.toSeq == Seq("a", "b"))
     assert(rewritten.count() == 5L)

@@ -39,6 +39,28 @@ object TestSpark {
     }
   }
   val Sf = "/root/testdata/sf0.001"
+
+  /** `body`'s result and the Spark jobs it started on this thread, counted
+    * under job group `group` */
+  def jobsDuring[T](group: String)(body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      val out = body
+      org.apache.spark.ListenerBusDrain(sc)
+      (out, jobs.get())
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 /** Drains CacheTracker-tracked blocks after every test. Any spec that runs
